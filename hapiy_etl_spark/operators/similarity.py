@@ -216,10 +216,12 @@ def lsh_bucket(vec: str, planes: list[list[float]]) -> Column:
     plane component is the identical binary64 the old F.lit carried;
     the fold is the same left-to-right aggregate as :func:`dot`."""
 
+    quoted = "`" + vec.replace("`", "``") + "`"
+
     def dot_sql(p: list[float]) -> str:
         arr = ", ".join(f"CAST('{x!r}' AS DOUBLE)" for x in p)
         return (
-            f"aggregate(zip_with({vec}, array({arr}), "
+            f"aggregate(zip_with({quoted}, array({arr}), "
             "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
             "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
         )

@@ -3,7 +3,6 @@
 from hapiy_etl_spark.pipeline.ingest import (  # noqa: F401
     COMMIT_SCHEMA,
     WIRE_SCHEMA,
-    CommitsPipeline,
     JsonCommitsSource,
     PipelineConfig,
     parse_commits,

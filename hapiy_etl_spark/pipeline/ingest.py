@@ -12,13 +12,14 @@ watermark-read → advance → scan → project → upsert) Spark-first:
 - R4 null-coalescing         → author.date null ⇒ BOTH email and date
   fall back to committer (git_etl.ts:100-105 — the fallback swaps both)
 - R5 string→timestamp cast   → ``to_timestamp`` (ISO-8601 default)
-- R6 keyed upsert            → dedup + anti-join append (operators/upsert)
+- R6 keyed upsert            → ``TxTable.merge`` in pipeline/reference_flow
 - R8 watermark read          → ``agg(max)``, null-safe (git_etl.ts:147)
 - R9 watermark advance       → persisted watermark + strict ``>`` filter,
   replacing the reference's +1s hack (git_etl.ts:319-324) exactly and
   losing no same-second rows
-- R10 truncate               → ``clear()`` removes the state dir
-- R11 orchestration          → ``run_once``
+- R10 truncate               → ``clear_on_startup`` removes the state dir
+- R11 orchestration          → ``TxCommitsPipeline.run_once``
+  (pipeline/reference_flow)
 - R13 config                 → ``PipelineConfig`` validation
 - R15 observability          → per-batch counts via logging
 
@@ -30,18 +31,15 @@ sidecar and is recomputed with agg(max) only on recovery.
 from __future__ import annotations
 
 import logging
-import shutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from datetime import datetime
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hapiy_etl_spark.operators.upsert import schema_diff, upsert_parquet
-from hapiy_etl_spark.operators.watermark import WatermarkStore
+from hapiy_etl_spark.operators.upsert import schema_diff
 
 log = logging.getLogger(__name__)
 
@@ -278,69 +276,3 @@ class PipelineConfig:
 
         return _os.environ.get(self.token_env) if self.use_github_token else None
 
-
-class CommitsPipeline:
-    """The per-tick composed job (R11): one DataFrame plan per run.
-
-    State layout: ``{state_dir}/commits`` parquet partitioned by
-    ``repo`` — the keyspace-per-repo namespacing of the reference's KV
-    prefix (git_etl.ts:130) expressed as partition pruning — plus
-    ``{state_dir}/watermarks.json``.
-    """
-
-    def __init__(self, config: PipelineConfig, source) -> None:
-        self.config = config
-        self.source = source
-        self._table = f"{config.state_dir}/commits"
-        self._wm = WatermarkStore(f"{config.state_dir}/watermarks.json")
-        if config.clear_on_startup:
-            self.clear()
-            config.clear_on_startup = False  # only on startup (R10)
-
-    def clear(self) -> None:
-        """Truncate state (R10, git_etl.ts:293-308)."""
-        shutil.rmtree(self.config.state_dir, ignore_errors=True)
-
-    def state(self, spark: SparkSession) -> DataFrame:
-        """Prefix scan ≡ partition-pruned read (R7, git_etl.ts:141-146)."""
-        if not Path(self._table).exists():
-            return spark.createDataFrame([], COMMIT_SCHEMA)
-        return spark.read.parquet(self._table).where(F.col("repo") == self.config.repo)
-
-    def run_once(self, spark: SparkSession) -> int:
-        """One tick: watermark → fetch(since) → project → schema
-        pre-flight → upsert."""
-        repo = self.config.repo
-        since = self._wm.get(repo)
-        wire = self.source.fetch(spark, since)
-        parsed = parse_commits(wire, repo)
-        n = parsed.count()
-        log.info("fetched %d commits for %s since %s", n, repo, since)  # R15
-        if n == 0:
-            return 0
-        evolve = self._schema_preflight(spark, parsed)
-        upsert_parquet(
-            spark,
-            parsed,
-            self._table,
-            keys=["repo", "commit_hash"],
-            partition_by=["repo"],
-            allow_missing_columns=evolve,
-        )
-        self._wm.advance_from(repo, parsed, "commit_ts")
-        return n
-
-    def _schema_preflight(self, spark: SparkSession, batch: DataFrame) -> bool:
-        """Drift gate before any write — the reference's fixed
-        compile-time schema (git_etl.ts:17-22) means drift there is
-        impossible by construction; an incremental Spark pipeline must
-        CHECK instead, because upstream producers change parquet/wire
-        schemas between runs silently. Footer-only comparison
-        (operators/upsert.schema_diff) — no data scan.
-
-        Delegates to ``check_schema_drift`` (shared with the TxTable
-        flow in pipeline/reference_flow.py)."""
-        if not Path(self._table).exists():
-            return False
-        state = spark.read.option("mergeSchema", "true").parquet(self._table)
-        return check_schema_drift(state, batch, self.config.on_schema_drift, self._table)

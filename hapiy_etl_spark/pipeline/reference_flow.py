@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from hapiy_etl_spark.operators.txstore import TxTable
 from hapiy_etl_spark.operators.watermark import WatermarkStore
 from hapiy_etl_spark.pipeline.ingest import (
+    COMMIT_SCHEMA,
     PipelineConfig,
     check_schema_drift,
     cron_interval_seconds,
@@ -52,12 +53,11 @@ log = logging.getLogger(__name__)
 class TxCommitsPipeline:
     """Incremental commit ingestion onto a transactional snapshot store.
 
-    Same per-tick semantics as ``CommitsPipeline`` (watermark → fetch →
-    project → pre-flight → keyed upsert) with the plain-parquet
-    swap-in-place sink replaced by ``TxTable.merge``: every tick is an
-    atomic versioned commit, so a crash mid-tick leaves the previous
-    snapshot fully readable and the tick simply re-runs (idempotent by
-    key — re-merged rows overwrite themselves).
+    Per tick: watermark → fetch → project → pre-flight → keyed upsert
+    through ``TxTable.merge``. Every tick is an atomic versioned commit,
+    so a crash mid-tick leaves the previous snapshot fully readable and
+    the tick simply re-runs (idempotent by key — re-merged rows
+    overwrite themselves).
     """
 
     def __init__(
@@ -87,7 +87,10 @@ class TxCommitsPipeline:
         with a ``partition={"repo": ...}`` spec are skipped at the
         MANIFEST (never listed), and Hive-partitioned merge dirs get
         Spark's native PartitionFilters on the residual equality — the
-        KV prefix scan at the file index either way."""
+        KV prefix scan at the file index either way. A never-written
+        table reads as an empty ``COMMIT_SCHEMA`` frame."""
+        if self.table.latest_version() == 0:
+            return spark.createDataFrame([], COMMIT_SCHEMA)
         return self.table.read(merge_schema=True, where={"repo": self.config.repo})
 
     def run_once(self, spark: SparkSession) -> int:

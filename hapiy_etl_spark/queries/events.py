@@ -2090,9 +2090,12 @@ def stats_pruned_time_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # which weeks are non-empty, in ONE job (optimization r16, guide
     # §1.2): the per-week limit(1).count() probe was one scan job per
-    # candidate week before any append ran
+    # candidate week before any append ran. Events with a NULL ts form
+    # a NULL week: no window can hold them, so no dir is appended.
     present = {
-        int(r["wk"]) for r in wk.groupBy("wk").count().collect()
+        int(r["wk"])
+        for r in wk.groupBy("wk").count().collect()
+        if r["wk"] is not None
     }
     n_dirs = 0
     for w in range(6):

@@ -237,12 +237,18 @@ def test_lsh_bucket_expr_matches_reference(spark):
             )
         return bucket
 
-    got = {r.id: r.b for r in df.select("id", S.lsh_bucket("v", planes).alias("b")).collect()}
-    want = {
-        r.id: r.b
-        for r in df.select("id", reference(F.col("v"), planes).alias("b")).collect()
-    }
-    assert got == want
+    # a column name that needs quoting in SQL must work as well
+    for name in ("v", "my vec"):
+        named = df.withColumnRenamed("v", name)
+        got = {
+            r.id: r.b
+            for r in named.select("id", S.lsh_bucket(name, planes).alias("b")).collect()
+        }
+        want = {
+            r.id: r.b
+            for r in named.select("id", reference(F.col(name), planes).alias("b")).collect()
+        }
+        assert got == want
 
 
 def test_minhash_lsh_demo_slice_non_degenerate(spark):

@@ -82,3 +82,23 @@ def test_harness_rejects_array_cells():
 
     with _pytest.raises(UnsafeOutputError):
         compare_frames("planted", ["v"], [([1, 2],)], ["v"], [([1, 2],)])
+
+
+def test_stats_pruned_time_slice_with_null_ts_event(spark, sf_dir, tmp_path):
+    """An event with a NULL ts forms a NULL week group; the query skips
+    it (no window can hold it) instead of raising on ``int(None)``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hapiy_etl_spark.io import TABLES
+
+    for t in TABLES:
+        if t != "events":
+            (tmp_path / f"{t}.parquet").symlink_to(f"{sf_dir}/{t}.parquet")
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    i = ev.schema.get_field_index("ts")
+    null_ts = ev.slice(0, 1).set_column(
+        i, ev.schema.field(i), pa.nulls(1, ev.schema.field(i).type)
+    )
+    pq.write_table(pa.concat_tables([ev, null_ts]), tmp_path / "events.parquet")
+    compare(spark, all_queries()["stats_pruned_time_slice"], str(tmp_path))

@@ -10,12 +10,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from hapiy_etl_spark.pipeline.ingest import (
-    CommitsPipeline,
     JsonCommitsSource,
     PipelineConfig,
     RestCommitsSource,
     parse_commits,
 )
+from hapiy_etl_spark.pipeline.reference_flow import TxCommitsPipeline
 
 
 def wire_row(sha, author_email, author_date, committer_email, committer_date, message="m"):
@@ -77,7 +77,7 @@ def test_pipeline_idempotent_and_watermarked(spark, tmp_path):
     b1 = write_fixture(tmp_path, BATCH1, "b1.jsonl")
     b2 = write_fixture(tmp_path, BATCH1 + BATCH2, "b12.jsonl")
 
-    pipe = CommitsPipeline(cfg, JsonCommitsSource(b1))
+    pipe = TxCommitsPipeline(cfg, JsonCommitsSource(b1), spark)
     assert pipe.run_once(spark) == 5
     assert pipe.state(spark).count() == 5
     wm1 = pipe._wm.get("repo1")
@@ -103,12 +103,13 @@ def test_pipeline_idempotent_and_watermarked(spark, tmp_path):
 def test_pipeline_repo_namespacing(spark, tmp_path):
     state_dir = str(tmp_path / "state")
     b1 = write_fixture(tmp_path, BATCH1, "b1.jsonl")
-    p1 = CommitsPipeline(PipelineConfig(repo="repo1", owner="o", state_dir=state_dir), JsonCommitsSource(b1))
+    p1 = TxCommitsPipeline(PipelineConfig(repo="repo1", owner="o", state_dir=state_dir), JsonCommitsSource(b1), spark)
     p1.run_once(spark)
     # second repo shares the state table; clear_on_startup=False to keep it
-    p2 = CommitsPipeline(
+    p2 = TxCommitsPipeline(
         PipelineConfig(repo="repo2", owner="o", state_dir=state_dir, clear_on_startup=False),
         JsonCommitsSource(write_fixture(tmp_path, BATCH2, "b2.jsonl")),
+        spark,
     )
     p2.run_once(spark)
     # prefix scan ≡ partition pruning: each pipeline sees only its repo (R7)
@@ -120,10 +121,10 @@ def test_pipeline_repo_namespacing(spark, tmp_path):
 def test_pipeline_clear_on_startup(spark, tmp_path):
     state_dir = str(tmp_path / "state")
     b1 = write_fixture(tmp_path, BATCH1, "b1.jsonl")
-    p1 = CommitsPipeline(PipelineConfig(repo="repo1", owner="o", state_dir=state_dir), JsonCommitsSource(b1))
+    p1 = TxCommitsPipeline(PipelineConfig(repo="repo1", owner="o", state_dir=state_dir), JsonCommitsSource(b1), spark)
     p1.run_once(spark)
     # clear_on_startup=True truncates prior state (R10)
-    p2 = CommitsPipeline(PipelineConfig(repo="repo1", owner="o", state_dir=state_dir), JsonCommitsSource(b1))
+    p2 = TxCommitsPipeline(PipelineConfig(repo="repo1", owner="o", state_dir=state_dir), JsonCommitsSource(b1), spark)
     assert p2.state(spark).count() == 0
     assert p2.run_once(spark) == 5
 
@@ -206,13 +207,7 @@ def test_rest_source_token_passthrough(spark):
 def _drift_state(spark, pipe, transform):
     """Rewrite the pipeline's state table through ``transform`` —
     simulates a state table written by a different pipeline version."""
-    df = transform(spark.read.parquet(pipe._table))
-    tmp = pipe._table + ".drift"
-    df.write.mode("overwrite").partitionBy("repo").parquet(tmp)
-    import shutil
-
-    shutil.rmtree(pipe._table)
-    shutil.move(tmp, pipe._table)
+    pipe.table.overwrite(transform(pipe.table.read(merge_schema=True)))
 
 
 def test_pipeline_schema_preflight_rejects_drift(spark, tmp_path):
@@ -222,7 +217,7 @@ def test_pipeline_schema_preflight_rejects_drift(spark, tmp_path):
     from hapiy_etl_spark.pipeline.ingest import SchemaDriftError
 
     cfg = PipelineConfig(repo="r", owner="o", state_dir=str(tmp_path / "state"))
-    pipe = CommitsPipeline(cfg, JsonCommitsSource(write_fixture(tmp_path, BATCH1, "b1.jsonl")))
+    pipe = TxCommitsPipeline(cfg, JsonCommitsSource(write_fixture(tmp_path, BATCH1, "b1.jsonl")), spark)
     assert pipe.run_once(spark) == 5
 
     # older-version state carries an extra column the batch lacks
@@ -241,7 +236,7 @@ def test_pipeline_schema_preflight_evolves_additive_drift(spark, tmp_path):
     cfg = PipelineConfig(
         repo="r", owner="o", state_dir=str(tmp_path / "state"), on_schema_drift="evolve"
     )
-    pipe = CommitsPipeline(cfg, JsonCommitsSource(write_fixture(tmp_path, BATCH1, "b1.jsonl")))
+    pipe = TxCommitsPipeline(cfg, JsonCommitsSource(write_fixture(tmp_path, BATCH1, "b1.jsonl")), spark)
     assert pipe.run_once(spark) == 5
 
     # drift BOTH ways: state gains 'stars' (batch lacks it) and loses
@@ -253,7 +248,7 @@ def test_pipeline_schema_preflight_evolves_additive_drift(spark, tmp_path):
     # only strictly-past-watermark rows are fetched (dd2 sits AT the
     # watermark and is not re-delivered)
     assert pipe.run_once(spark) == 1
-    out = spark.read.option("mergeSchema", "true").parquet(pipe._table)
+    out = pipe.table.read(merge_schema=True)
     assert {"stars", "commit_email"} <= set(out.columns)
     rows = {r.commit_hash: r for r in out.collect()}
     assert set(rows) == {"aaa", "bbb", "ccc", "dd1", "dd2", "eee"}
@@ -269,7 +264,7 @@ def test_pipeline_schema_preflight_never_evolves_retyped(spark, tmp_path):
     cfg = PipelineConfig(
         repo="r", owner="o", state_dir=str(tmp_path / "state"), on_schema_drift="evolve"
     )
-    pipe = CommitsPipeline(cfg, JsonCommitsSource(write_fixture(tmp_path, BATCH1, "b1.jsonl")))
+    pipe = TxCommitsPipeline(cfg, JsonCommitsSource(write_fixture(tmp_path, BATCH1, "b1.jsonl")), spark)
     assert pipe.run_once(spark) == 5
     _drift_state(
         spark, pipe, lambda df: df.withColumn("commit_ts", F.col("commit_ts").cast("string"))

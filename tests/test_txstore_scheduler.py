@@ -4032,3 +4032,69 @@ def test_txstore_delete_keys_concurrent_retry_no_lost_update(spark, tmp_path):
     assert len(got) == 9  # 10 - {3,7} + {77}
     # gapless versions: the lost round never wrote a manifest
     assert [m["version"] for m in racer.history()] == [1, 2, 3]
+
+
+def test_txstore_scan_and_rewrites_share_one_pruning_rule(spark, tmp_path):
+    """The dirs a pruned read scans are exactly the dirs the matching
+    rewrite touches: read(where_in=) vs delete_keys, and
+    read(where_range=) vs delete_where(range_hint=) and
+    merge(prune_col=). Dirs are pruned by partition spec, stats and
+    bloom; a hinted column without stats on a dir cannot prune it, but
+    another hinted column still can."""
+    t = TxTable(spark, str(tmp_path / "t"))
+
+    def add(keys, ts0, part=None, stats=("k", "ts"), blooms=("k",)):
+        rows = [(k, ts0 + i, part or "z", f"v{k}") for i, k in enumerate(keys)]
+        t.append(
+            spark.createDataFrame(rows, "k long, ts long, part string, v string"),
+            partition={"part": part} if part else None,
+            stats_cols=list(stats),
+            bloom_cols=list(blooms) or None,
+        )
+
+    add(range(0, 10), 100, part="a")
+    add(range(10, 20), 200, part="b")
+    add(range(20, 30), 300, stats=("k",))  # no ts stats
+    add(range(30, 40), 400, blooms=())
+    add(range(40, 100, 2), 500)  # even keys: same k range as the odd
+    add(range(41, 100, 2), 600)  # dir, so only the blooms tell them apart
+    base = t.latest_version()
+    # name each dir by its smallest key
+    label = {d: s["k"][0] for d, s in t._manifest(base)["stats"].items()}
+
+    def scanned(**kw):
+        return {label[d] for d in dirs_read(t.read(**kw))}
+
+    def rewritten(op):
+        before = t._manifest(t.latest_version())["dirs"]
+        op()
+        after = set(t._manifest(t.latest_version())["dirs"])
+        t.restore(base)
+        return {label[d] for d in before if d not in after}
+
+    # point pruning by stats and bloom, then by partition spec
+    assert scanned(where_in={"k": [5, 44]}) == {0, 40}
+    assert rewritten(lambda: t.delete_keys([5, 44], on="k")) == {0, 40}
+    assert scanned(where_in={"part": ["b"]}) == {10, 20, 30, 40, 41}
+    assert rewritten(lambda: t.delete_keys(["b"], on="part")) == {10, 20, 30, 40, 41}
+
+    # range pruning: the dir without ts stats is kept
+    rng = {"ts": (150, 250)}
+    assert scanned(where_range=rng) == {10, 20}
+    assert rewritten(
+        lambda: t.delete_where("ts BETWEEN 150 AND 250", range_hint=rng)
+    ) == {10, 20}
+    batch = spark.createDataFrame(
+        [(1000, 150, "z", "new"), (1001, 250, "z", "new")],
+        "k long, ts long, part string, v string",
+    )
+    assert rewritten(lambda: t.merge(batch, keys=["ts"], prune_col="ts")) == {10, 20}
+
+    # two-column hint: k prunes the dir that has no ts stats
+    rng2 = {"ts": (150, 350), "k": (0, 15)}
+    assert scanned(where_range=rng2) == {10}
+    assert rewritten(
+        lambda: t.delete_where(
+            "ts BETWEEN 150 AND 350 AND k BETWEEN 0 AND 15", range_hint=rng2
+        )
+    ) == {10}
