@@ -1,4 +1,5 @@
-"""Table maintenance: small-file compaction and stratified sampling.
+"""Table maintenance: the TxTable small-files compaction policy, derived
+index repair, clustering keys and stratified sampling.
 
 At 100 TB the silent killers are file-count explosions (streaming
 sinks, per-batch appends) and unbalanced samples; both fixes are
@@ -8,9 +9,8 @@ one-liners that belong in the operator library so jobs reach for them.
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
-from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def auto_compact(
@@ -242,33 +242,6 @@ def prefix_bucketed_row_number(
         .withColumn(out_col, (F.col("__pboff") + F.col("__pblpos")).cast("long"))
         .drop("__pbh", "__pbb", "__pblpos", "__pboff")
     )
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_files: int,
-    partition_by: Sequence[str] | None = None,
-) -> int:
-    """Rewrite a parquet dir into ~target_files files (per partition when
-    partitioned). coalesce() avoids a shuffle when reducing; the rewrite
-    goes through a temp dir + swap like the upsert sink.
-
-    Returns the file count after compaction.
-    """
-    import shutil
-    import tempfile
-
-    df = spark.read.parquet(path)
-    writer = df.coalesce(target_files).write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*list(partition_by))
-    tmp = tempfile.mkdtemp(prefix="compact_")
-    writer.parquet(f"{tmp}/data")
-    shutil.rmtree(path)
-    shutil.move(f"{tmp}/data", path)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return sum(1 for p in Path(path).rglob("*.parquet"))
 
 
 def stratified_sample(

@@ -499,6 +499,14 @@ _PQ_FIT_POOL = None
 #: heredoc) breaks every worker at startup — after ONE such failure the
 #: fit stays serial instead of paying pool-spawn + failure per call
 _PQ_FIT_POOL_BROKEN = False
+#: seconds a fresh pool gets to run one trivial probe task. Under a
+#: main script without an ``if __name__ == "__main__"`` guard, each
+#: spawn worker re-runs the whole script before it takes any task, so
+#: ``pool.map`` blocks for as long as that takes (forever for a
+#: long-running script) instead of raising; a probe that misses this
+#: deadline marks the pool broken (the fit goes serial) before any fit
+#: is submitted. An idle 4-vCPU host answers the probe in ~0.4 s.
+_PQ_FIT_POOL_PROBE_S = 10.0
 
 
 def _pq_fit_pool_shutdown():
@@ -527,6 +535,9 @@ def _pq_fit_pool():
             mp_context=mp.get_context("spawn"),
         )
         atexit.register(_pq_fit_pool_shutdown)
+        # raises TimeoutError on a pool whose workers never start; the
+        # caller's fallback then marks the pool broken and shuts it down
+        _PQ_FIT_POOL.submit(abs, 0).result(timeout=_PQ_FIT_POOL_PROBE_S)
     return _PQ_FIT_POOL
 
 
@@ -545,8 +556,9 @@ def _pq_codebooks(sample, m: int, n_codes: int, seed: int, iters: int = 8):
     every codebook — is bit-identical to the serial fit
     (np.array_equal-pinned in tests/test_optimization_r16.py); the
     cluster is idle during this driver-side fit, so the pool's cores
-    are free capacity at any scale. Any pool failure falls back to the
-    serial loop."""
+    are free capacity at any scale. Any pool failure — including a
+    fresh pool whose probe task misses ``_PQ_FIT_POOL_PROBE_S`` — falls
+    back to the serial loop."""
     import numpy as np
 
     from hapiy_etl_spark._pqfit import fit_subspace
@@ -581,7 +593,13 @@ def _pq_codebooks(sample, m: int, n_codes: int, seed: int, iters: int = 8):
             _PQ_FIT_POOL_BROKEN = True
             try:
                 if _PQ_FIT_POOL is not None:
-                    _PQ_FIT_POOL.shutdown(wait=False)
+                    # shutdown() drops the worker handles, and a worker
+                    # still re-running an unguarded main script would
+                    # run on (its own Spark session included): stop it
+                    workers = list((getattr(_PQ_FIT_POOL, "_processes", None) or {}).values())
+                    _PQ_FIT_POOL.shutdown(wait=False, cancel_futures=True)
+                    for w in workers:
+                        w.terminate()
             except Exception:
                 pass
             _PQ_FIT_POOL = None

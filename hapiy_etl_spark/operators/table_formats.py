@@ -1,16 +1,16 @@
 """Transactional table-format gateway (Delta/Iceberg), import-gated.
 
-The engine's upsert/SCD2 operators emulate MERGE on plain parquet
-(operators/upsert.py, operators/scd2.py) because this environment ships
-no lakehouse jars. In production the same call sites route through a
-real MERGE INTO — this module is that seam: it detects an available
-format and either executes the native MERGE or tells the caller exactly
-which emulation to use instead.
+The engine's keyed writes run on its own snapshot-versioned parquet
+table, ``TxTable.merge`` (operators/txstore.py), because this
+environment ships no lakehouse jars. In production the same call sites
+route through a real MERGE INTO — this module is that seam: it detects
+an available format and either executes the native MERGE or points the
+caller at ``TxTable.merge`` instead.
 
 Environment note (r3): the build container bakes its Python deps and
 forbids package installation, and `import delta` fails — so the native
 MERGE branch cannot execute here by policy, not by oversight. The
-fallback path (upsert_parquet) carries the oracle-checked semantics;
+fallback path (``TxTable.merge``) carries the oracle-checked semantics;
 the native branch is exercised the first time the package lands on a
 real cluster classpath.
 """
@@ -45,9 +45,7 @@ def merge_upsert(
             "No transactional table format on the classpath. Use "
             "hapiy_etl_spark.operators.txstore.TxTable.merge (snapshot-"
             "versioned parquet MERGE with optimistic concurrency and "
-            "time travel), hapiy_etl_spark.operators.upsert.upsert_parquet "
-            "(plain keyed emulation), or add delta-spark jars for native "
-            "MERGE INTO."
+            "time travel), or add delta-spark jars for native MERGE INTO."
         )
     from delta.tables import DeltaTable
 

@@ -192,21 +192,31 @@ def unigram_train(
     table. Returns (rank, piece, n_chars, cnt) — the ranked vocabulary
     a tokenizer ships, counts = final-round usage.
 
+    The training chain scans the type table once per round, so it is
+    materialized first (eager ``localCheckpoint``); a caller that
+    already materialized it (the bake-off's shared tokenization pass)
+    calls ``unigram_train_materialized`` directly."""
+    return unigram_train_materialized(
+        words.localCheckpoint(eager=True), rounds, l_max, seed_n, vocab_n
+    )
+
+
+def unigram_train_materialized(
+    types: DataFrame,
+    rounds: int = 2,
+    l_max: int = 4,
+    seed_n: int = 80,
+    vocab_n: int = 40,
+) -> DataFrame:
+    """``unigram_train`` over an already-materialized (word, cnt) type
+    table (the caller checkpointed or cached it; every round re-reads
+    it).
+
     Chain: seed (top ``seed_n`` substrings by count, plus ALL single
     characters) -> ``rounds`` x (Viterbi E-step, usage M-step; unused
     multi-char pieces drop, characters persist at ``max(usage, 1)``)
     -> prune to the top ``vocab_n`` pieces plus all characters."""
-    spark = words.sparkSession
-    try:
-        # a caller that already materialized the type table (the
-        # bake-off's shared tokenization pass, r16) need not pay a
-        # second copy: a LogicalRDD plan IS a local checkpoint
-        already = (
-            words._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
-        )
-    except Exception:
-        already = False
-    types = words if already else words.localCheckpoint(eager=True)
+    spark = types.sparkSession
     subs = _seed_candidates(types, l_max)
     top = subs.orderBy(F.col("cnt").desc(), "piece").limit(seed_n).collect()
     char_rows = subs.where(F.length("piece") == 1).collect()

@@ -7,19 +7,18 @@ Plain parquet has no MERGE, so the kernel is:
     new.dropDuplicates(keys)  ∪  existing ⟕anti new     (on keys)
 
 i.e. new rows win, existing rows survive only when their key is absent
-from the batch. At scale the anti-join shuffles on the key — bucket or
+from the batch. ``TxTable.merge`` (operators/txstore.py) runs this
+kernel inside its copy-on-write commit, so a keyed write lands as one
+atomic snapshot. At scale the anti-join shuffles on the key — bucket or
 partition the state table by the key to co-locate; with Delta/Iceberg
-available this becomes a native MERGE INTO (documented prod path).
+available this becomes a native MERGE INTO (operators/table_formats.py).
 """
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from collections.abc import Sequence
-from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -52,41 +51,6 @@ def upsert_by_key(
         return batch
     survivors = existing.join(batch.select(*keys), on=list(keys), how="left_anti")
     return survivors.unionByName(batch, allowMissingColumns=allow_missing_columns)
-
-
-def upsert_parquet(
-    spark: SparkSession,
-    new: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    order_col: str | None = None,
-    partition_by: Sequence[str] | None = None,
-    allow_missing_columns: bool = False,
-) -> None:
-    """Upsert into a parquet state table (write-temp-then-swap).
-
-    The swap keeps the operation atomic-enough for a single writer; real
-    concurrency needs a transactional table format (Delta MERGE).
-    ``allow_missing_columns`` enables the schema-evolution merge (and a
-    mergeSchema read, since a previously-evolved table's files may
-    disagree on columns).
-    """
-    target = Path(path)
-    reader = spark.read
-    if allow_missing_columns:
-        reader = reader.option("mergeSchema", "true")
-    existing = reader.parquet(path) if target.exists() else None
-    merged = upsert_by_key(existing, new, keys, order_col, allow_missing_columns)
-
-    tmp = tempfile.mkdtemp(prefix="upsert_", dir=str(target.parent if target.parent.exists() else "/tmp"))
-    writer = merged.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*list(partition_by))
-    writer.parquet(f"{tmp}/data")
-    if target.exists():
-        shutil.rmtree(target)
-    shutil.move(f"{tmp}/data", str(target))
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def table_diff(

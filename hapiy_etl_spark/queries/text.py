@@ -2325,7 +2325,7 @@ def vocab_tokenizer_bakeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hapiy_etl_spark.operators.bpe import bpe_segment, bpe_train
     from hapiy_etl_spark.operators.unigram import (
         unigram_segment,
-        unigram_train,
+        unigram_train_materialized,
     )
 
     t = load_tables(spark, sf_dir, ("documents",))
@@ -2342,7 +2342,7 @@ def vocab_tokenizer_bakeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg_b = bpe_segment(types_full.select("word"), "word", merges).select(
         "word", F.size("subwords").alias("n_sub_bpe")
     )
-    vocab = unigram_train(types_full, **_UNI_PARAMS)
+    vocab = unigram_train_materialized(types_full, **_UNI_PARAMS)
     seg_u = unigram_segment(
         types_full.select("word"), "word", vocab, l_max=_UNI_PARAMS["l_max"]
     ).select("word", F.size("subwords").alias("n_sub_uni"))

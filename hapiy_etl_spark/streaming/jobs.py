@@ -1,21 +1,28 @@
 """Structured Streaming: event-time watermarks, tumbling/sliding/session
-windows, stateful dedup, foreachBatch upsert sink.
+windows, stateful dedup, and the foreachBatch sinks.
 
 The reference's cron micro-batch loop (R12, git_etl.ts:351-355) maps to
-micro-batch triggers; its KV upsert sink (R6) to ``foreachBatch`` +
-the upsert operator. Batch twins of these queries live in
+micro-batch triggers; its transactional KV upsert sink (R6) to
+``foreachBatch`` into a ``TxTable`` (operators/txstore.py), the only
+state store the sinks write: every micro-batch commits through one
+atomic manifest publish, so a crash mid-batch never loses or tears the
+table. Every sink runs through one skeleton, ``_run_sink`` (skip empty
+micro-batches, resolve the checkpoint's run id, start the
+``writeStream``). Batch twins of these queries live in
 queries/events.py so the DuckDB oracle can check the same semantics.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import inspect
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hapiy_etl_spark.operators.upsert import upsert_parquet
+from hapiy_etl_spark.operators.maintenance import auto_compact, sized_cluster_dirs
+from hapiy_etl_spark.operators.txstore import TxTable
 
 # Explicit schema (streaming sources must not infer). ts arrives as
 # long nanos (parquet TIMESTAMP(NANOS) read via nanosAsLong) and is
@@ -202,23 +209,121 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str = "append") -> None
     q.awaitTermination()
 
 
-def foreach_batch_upsert(
-    stream: DataFrame, path: str, keys: Sequence[str], checkpoint: str
+def _run_sink(
+    stream: DataFrame,
+    checkpoint: str,
+    body: Callable[[DataFrame, int, str | None], None],
+    processing_time: str | None = None,
 ):
-    """Exactly-once-ish keyed upsert sink: each micro-batch MERGEs into
-    the parquet state table (foreachBatch + upsert operator). Re-delivered
-    batches are idempotent because the upsert is keyed (R6)."""
+    """Start ``stream`` into a foreachBatch sink — the one skeleton every
+    sink in this module runs on. Empty micro-batches are skipped; every
+    other one is handed to ``body(batch, epoch_id, run_id)``, where
+    ``run_id`` is the checkpoint's query id (``_checkpoint_run_id``,
+    resolved on the first non-empty batch — Spark writes it at stream
+    start). The trigger is one bounded drain (availableNow) unless
+    ``processing_time`` (e.g. "2 seconds") asks for the always-on
+    posture: ONE long-running query polls its source and lands new data
+    as it arrives; the exactly-once machinery ((run, epoch) replay state
+    + engine checkpoint) is identical in both modes. Returns the
+    StreamingQuery."""
+    run_id = None
 
     def _sink(batch: DataFrame, epoch_id: int) -> None:
+        nonlocal run_id
         if batch.isEmpty():
             return
-        upsert_parquet(batch.sparkSession, batch, path, keys)
+        if run_id is None:
+            run_id = _checkpoint_run_id(checkpoint)
+        body(batch, epoch_id, run_id)
 
     return (
         stream.writeStream.foreachBatch(_sink)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
+        .trigger(
+            **(
+                {"processingTime": processing_time}
+                if processing_time
+                else {"availableNow": True}
+            )
+        )
         .start()
+    )
+
+
+def _checkpoint_run_id(checkpoint: str) -> str | None:
+    """The streaming query id Spark persists in ``<checkpoint>/metadata``
+    at stream start (before the first batch runs). It is stable across
+    restarts from the same checkpoint and FRESH when the checkpoint is
+    reset — exactly the run identity replay detection needs: a new
+    checkpoint restarts epoch ids at 0, which must read as a new run,
+    not as a replay of epochs 0..N."""
+    import json as _json
+    from pathlib import Path as _Path
+
+    try:
+        return _json.loads((_Path(checkpoint) / "metadata").read_text()).get("id")
+    except (OSError, ValueError):
+        return None
+
+
+def _compact_after_append(
+    table: TxTable,
+    max_dirs: int | None,
+    kw: dict | None,
+    cluster_by: str | None = None,
+    n_buckets: int | None = None,
+) -> None:
+    """The small-files policy every sink runs once its append committed
+    (``maintenance.auto_compact``; a noop without ``max_dirs``). ``kw``
+    are the caller's optimize kwargs. A bucket-keyed index called
+    without ``kw`` (``cluster_by`` set) is re-clustered on that column
+    into a DERIVED dir count (``maintenance.sized_cluster_dirs``): it
+    grows with index rows until one dir per bucket, always lands UNDER
+    the threshold so the policy stays amortized, and the dirs keep
+    bucket-tight stats for the pruned per-tick probe. The derivation's
+    row count is a full index scan, so it runs ONLY on ticks where the
+    threshold fires, never on the non-compacting ones."""
+    if not max_dirs:
+        return
+    if kw is None and cluster_by is not None:
+        if table.n_dirs() < max_dirs:
+            return  # under threshold: auto_compact would noop
+        kw = {
+            "cluster_by": cluster_by,
+            "n_dirs": sized_cluster_dirs(table.read().count(), n_buckets, max_dirs),
+        }
+    auto_compact(table, max_dirs, **(kw or {}))
+
+
+def _bucket_pruned_probe(index: TxTable, batch_buckets: DataFrame, col: str):
+    """The index rows a batch can collide with. Dedup only ever joins on
+    ``col`` equality, so reading just the dirs that may hold the batch's
+    own buckets (``where_in``) is exact, and per-tick read cost tracks
+    the batch's bucket spread, not corpus age. The distinct-bucket collect (≤ n_buckets tiny
+    rows) is the only driver round-trip; a 1-2 dir index is read whole,
+    because the collect would cost more than it prunes. None when the
+    batch has no buckets (nothing to probe)."""
+    if index.n_dirs() <= 2:
+        return index.read()
+    present = sorted(r[0] for r in batch_buckets.select(col).distinct().collect())
+    return index.read(where_in={col: present}) if present else None
+
+
+def foreach_batch_upsert(
+    stream: DataFrame, path: str, keys: Sequence[str], checkpoint: str
+):
+    """Keyed upsert sink: each micro-batch MERGEs into the TxTable at
+    ``path`` (``TxTable.merge`` — copy-on-write, one atomic manifest
+    publish, so a crash mid-batch leaves the previous snapshot intact).
+    Re-delivered batches are idempotent because the upsert is keyed
+    (R6). Read the state with ``TxTable(spark, path).read()``; the
+    superseded snapshots' dirs stay on disk until ``TxTable.vacuum``."""
+    return _run_sink(
+        stream,
+        checkpoint,
+        lambda batch, epoch_id, run_id: TxTable(batch.sparkSession, path).merge(
+            batch, keys
+        ),
     )
 
 
@@ -231,9 +336,12 @@ def foreach_batch_kmv_rollup(
     k: int = 256,
 ):
     """Streaming mergeable-sketch rollup: each micro-batch KMV-sketches
-    its rows and merges into a parquet sketch-state table (union + keep
-    k smallest hashes per group) — a distinct-count rollup that never
-    re-reads history, the streaming twin of agg_kmv_distinct_sketch.
+    its rows and merges into a sketch-state TxTable (union + keep k
+    smallest hashes per group, committed as one ``overwrite``) — a
+    distinct-count rollup that never re-reads history, the streaming
+    twin of agg_kmv_distinct_sketch. Read the state with
+    ``TxTable(spark, path).read()``; as with ``foreach_batch_upsert``,
+    superseded state dirs stay on disk until ``TxTable.vacuum``.
 
     Why sketches and not dropDuplicates: the state is k doubles per
     group regardless of stream length, and the merge is associative /
@@ -242,23 +350,15 @@ def foreach_batch_kmv_rollup(
     the estimate. At cluster scale the sketch state stays broadcast-
     sized while exact distinct state grows with cardinality.
     """
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from hapiy_etl_spark.operators.sketches import kmv_merge, kmv_sketch
 
     gcols = list(group_cols)
 
-    def _sink(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        new = kmv_sketch(batch, gcols, value_col, k)
-        target = Path(path)
-        if target.exists():
-            state = spark.read.parquet(path)
-            s, n = state.alias("s"), new.alias("n")
+    def _merge(batch: DataFrame, epoch_id: int, run_id: str | None) -> None:
+        state = TxTable(batch.sparkSession, path)
+        merged = kmv_sketch(batch, gcols, value_col, k)
+        if state.latest_version():
+            s, n = state.read().alias("s"), merged.alias("n")
             merged = s.join(n, on=gcols, how="full").select(
                 *gcols,
                 F.when(F.col("s.sketch").isNull(), F.col("n.sketch"))
@@ -266,23 +366,9 @@ def foreach_batch_kmv_rollup(
                 .otherwise(kmv_merge(F.col("s.sketch"), F.col("n.sketch"), k))
                 .alias("sketch"),
             )
-        else:
-            merged = new
-        tmp = tempfile.mkdtemp(
-            prefix="kmv_", dir=str(target.parent if target.parent.exists() else "/tmp")
-        )
-        merged.write.mode("overwrite").parquet(f"{tmp}/data")
-        if target.exists():
-            shutil.rmtree(path)
-        shutil.move(f"{tmp}/data", str(target))
-        shutil.rmtree(tmp, ignore_errors=True)
+        state.overwrite(merged)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_sink(stream, checkpoint, _merge)
 
 
 def foreach_batch_tx_append(
@@ -311,44 +397,16 @@ def foreach_batch_tx_append(
     unaffected — replay state carries through the optimize commit, and
     a replayed epoch skips BOTH its append and the policy (the policy
     only runs when the append actually committed)."""
-    from hapiy_etl_spark.operators.maintenance import auto_compact
-    from hapiy_etl_spark.operators.txstore import TxTable
 
-    def _sink(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        appended = tx_append_once(
-            batch, path, epoch_id, run_id=_checkpoint_run_id(checkpoint)
-        )
-        if appended and auto_compact_max_dirs:
-            auto_compact(
+    def _append(batch: DataFrame, epoch_id: int, run_id: str | None) -> None:
+        if tx_append_once(batch, path, epoch_id, run_id=run_id):
+            _compact_after_append(
                 TxTable(batch.sparkSession, path),
                 auto_compact_max_dirs,
-                **(auto_compact_kw or {}),
+                auto_compact_kw,
             )
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _checkpoint_run_id(checkpoint: str) -> str | None:
-    """The streaming query id Spark persists in ``<checkpoint>/metadata``
-    at stream start (before the first batch runs). It is stable across
-    restarts from the same checkpoint and FRESH when the checkpoint is
-    reset — exactly the run identity replay detection needs: a new
-    checkpoint restarts epoch ids at 0, which must read as a new run,
-    not as a replay of epochs 0..N."""
-    import json as _json
-    from pathlib import Path as _Path
-
-    try:
-        return _json.loads((_Path(checkpoint) / "metadata").read_text()).get("id")
-    except (OSError, ValueError):
-        return None
+    return _run_sink(stream, checkpoint, _append)
 
 
 def tx_append_once(
@@ -374,8 +432,6 @@ def tx_append_once(
     not silently skipped. Without a run identity, an epoch regression
     is ambiguous — replay or reset — so it raises instead of guessing;
     only the classic same-epoch re-delivery is skipped."""
-    from hapiy_etl_spark.operators.txstore import TxTable
-
     table = TxTable(batch.sparkSession, path)
     if not _tx_replay_check(table, epoch_id, run_id, path):
         return False
@@ -467,19 +523,7 @@ def foreach_batch_ingest_dedup(
     corpus_path: str,
     sig_path: str,
     checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 16,
-    band_size: int = 2,
-    jaccard_threshold: float = 0.5,
-    portable: bool = True,
-    n_band_buckets: int | None = None,
-    auto_compact_max_dirs: int | None = None,
-    corpus_compact_kw: dict | None = None,
-    sig_compact_kw: dict | None = None,
-    group_path: str | None = None,
-    extra_appends=None,
+    **opts,
 ):
     """Streaming ingestion with ONLINE near-dedup — the front door of a
     training-data pipeline: each micro-batch computes its MinHash
@@ -534,41 +578,17 @@ def foreach_batch_ingest_dedup(
     index's stats): ``corpus_compact_kw`` defaults to a bare optimize,
     ``sig_compact_kw`` defaults to ``{"cluster_by": "bb"}`` so the
     index regains bucket-tight dirs — and the pruned per-tick read —
-    after every compaction."""
-    run_id = None
-
-    def _sink(batch: DataFrame, epoch_id: int) -> None:
-        nonlocal run_id
-        if batch.isEmpty():
-            return
-        if run_id is None:
-            run_id = _checkpoint_run_id(checkpoint)
-        ingest_dedup_batch(
-            batch,
-            corpus_path,
-            sig_path,
-            epoch_id,
-            run_id=run_id,
-            id_col=id_col,
-            text_col=text_col,
-            n=n,
-            num_hashes=num_hashes,
-            band_size=band_size,
-            jaccard_threshold=jaccard_threshold,
-            portable=portable,
-            n_band_buckets=n_band_buckets,
-            auto_compact_max_dirs=auto_compact_max_dirs,
-            corpus_compact_kw=corpus_compact_kw,
-            sig_compact_kw=sig_compact_kw,
-            group_path=group_path,
-            extra_appends=extra_appends,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    after every compaction. ``opts`` are ``ingest_dedup_batch``'s
+    keyword options (``id_col``, ``num_hashes``, ``n_band_buckets``,
+    ``auto_compact_max_dirs``, ``extra_appends``, ...)."""
+    # an unknown option fails here, not inside the first micro-batch
+    inspect.signature(ingest_dedup_batch).bind(None, None, None, 0, **opts)
+    return _run_sink(
+        stream,
+        checkpoint,
+        lambda batch, epoch_id, run_id: ingest_dedup_batch(
+            batch, corpus_path, sig_path, epoch_id, run_id=run_id, **opts
+        ),
     )
 
 
@@ -622,7 +642,6 @@ def ingest_dedup_batch(
         minhash_signatures,
     )
     from hapiy_etl_spark.operators.txstore import (
-        TxTable,
         txgroup_commit_appends,
         txgroup_recover,
     )
@@ -630,6 +649,12 @@ def ingest_dedup_batch(
     spark = batch.sparkSession
     if n_band_buckets is None:
         n_band_buckets = N_BAND_BUCKETS
+    geom_stamp = {
+        "n_band_buckets": n_band_buckets,
+        "num_hashes": num_hashes,
+        "band_size": band_size,
+        "portable": int(portable),
+    }
     if group_path is None:
         group_path = str(Path(corpus_path) / "_txgroup")
     # roll forward any group commit a crash interrupted mid-publish —
@@ -677,14 +702,8 @@ def ingest_dedup_batch(
             # — batch band/bucket values simply stop matching stored
             # ones and true duplicates are silently admitted. Every
             # append stamps its geometry; disagreeing callers fail loud.
-            geom = {
-                "n_band_buckets": n_band_buckets,
-                "num_hashes": num_hashes,
-                "band_size": band_size,
-                "portable": int(portable),
-            }
             rec = None
-            for gk, want in geom.items():
+            for gk, want in geom_stamp.items():
                 rec_k = recorded_stamp(sig_t, gk)
                 if gk == "n_band_buckets":
                     rec = rec_k
@@ -715,22 +734,7 @@ def ingest_dedup_batch(
                     "heal_index_from_changes) before resuming the "
                     "stream"
                 )
-            if sig_t.n_dirs() > 2:
-                # ≤ n_band_buckets tiny rows: the ONLY driver
-                # round-trip, and what turns the index read into
-                # dir-level pruning
-                present = sorted(
-                    r[0] for r in bp.select("bb").distinct().collect()
-                )
-                idx_rows = (
-                    sig_t.read(where_in={"bb": present})
-                    if present
-                    else None
-                )
-            else:
-                # 1-2 dirs: nothing worth skipping — the distinct-
-                # bucket collect would cost more than it prunes
-                idx_rows = sig_t.read()
+            idx_rows = _bucket_pruned_probe(sig_t, bp, "bb")
             if idx_rows is not None:
                 drop = drop.unionByName(
                     dedup_against_band_index(
@@ -758,12 +762,6 @@ def ingest_dedup_batch(
         survivors = batch.join(
             drop.withColumnRenamed("doc", id_col), id_col, "left_anti"
         )
-        geom_stamp = {
-            "n_band_buckets": n_band_buckets,
-            "num_hashes": num_hashes,
-            "band_size": band_size,
-            "portable": int(portable),
-        }
         corpus_t = TxTable(spark, corpus_path)
         need_c = _tx_replay_check(corpus_t, epoch_id, run_id)
         need_s = _tx_replay_check(sig_t, epoch_id, run_id)
@@ -828,43 +826,13 @@ def ingest_dedup_batch(
                     )
         # replay gate: a fully-replayed epoch commits nothing and must
         # not advance either table with a policy optimize either
-        if (appended_c or appended_s) and auto_compact_max_dirs:
-            from hapiy_etl_spark.operators.maintenance import auto_compact
-
-            auto_compact(
-                TxTable(spark, corpus_path),
-                auto_compact_max_dirs,
-                **(corpus_compact_kw or {}),
+        if appended_c or appended_s:
+            _compact_after_append(
+                corpus_t, auto_compact_max_dirs, corpus_compact_kw
             )
-            sig_t_c = TxTable(spark, sig_path)
-            if sig_compact_kw is None and sig_t_c.n_dirs() >= auto_compact_max_dirs:
-                # derived dir count (VERDICT r10 item 4): grows with
-                # index rows until one dir per bucket, always lands
-                # UNDER the threshold so the policy stays amortized —
-                # every ~max_dirs/2 epochs — while the clustered dirs
-                # keep their bb-tight stats for the pruned per-tick
-                # read. Both the derivation's count() and this gate's
-                # n_dirs() run ONLY on ticks where the policy actually
-                # fires (review r11: an unconditional count() was a
-                # full index scan on every non-compacting tick — the
-                # O(index) per-tick class r9/r10 removed); the count
-                # is then marginal next to the clustered rewrite.
-                from hapiy_etl_spark.operators.maintenance import (
-                    sized_cluster_dirs,
-                )
-
-                sig_compact_kw = {
-                    "cluster_by": "bb",
-                    "n_dirs": sized_cluster_dirs(
-                        sig_t_c.read().count(),
-                        n_band_buckets,
-                        auto_compact_max_dirs,
-                    ),
-                }
-            if sig_compact_kw is not None:
-                auto_compact(sig_t_c, auto_compact_max_dirs, **sig_compact_kw)
-            # else: under threshold this tick — auto_compact would noop;
-            # the next over-threshold tick derives and compacts
+            _compact_after_append(
+                sig_t, auto_compact_max_dirs, sig_compact_kw, "bb", n_band_buckets
+            )
     finally:
         bp.unpersist()
         sigs.unpersist()
@@ -874,12 +842,7 @@ def foreach_batch_ingest_semdedup(
     stream: DataFrame,
     index_path: str,
     checkpoint: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.3,
-    bits: int = 8,
-    auto_compact_max_dirs: int | None = None,
-    compact_kw: dict | None = None,
+    **opts,
 ):
     """Streaming ingestion with ONLINE SEMANTIC dedup — the embedding
     twin of ``foreach_batch_ingest_dedup``: each micro-batch sign-
@@ -904,33 +867,17 @@ def foreach_batch_ingest_semdedup(
     around. Rows with a NULL vector are excluded from dedup, get a
     NULL bucket (never equi-joins), and always survive — the NULL-text
     rule's twin. ``auto_compact_max_dirs`` bounds the per-epoch
-    small-files growth."""
-    run_id = None
-
-    def _sink(batch: DataFrame, epoch_id: int) -> None:
-        nonlocal run_id
-        if batch.isEmpty():
-            return
-        if run_id is None:
-            run_id = _checkpoint_run_id(checkpoint)
-        ingest_semdedup_batch(
-            batch,
-            index_path,
-            epoch_id,
-            run_id=run_id,
-            id_col=id_col,
-            vec_col=vec_col,
-            threshold=threshold,
-            bits=bits,
-            auto_compact_max_dirs=auto_compact_max_dirs,
-            compact_kw=compact_kw,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    small-files growth. ``opts`` are ``ingest_semdedup_batch``'s
+    keyword options (``id_col``, ``vec_col``, ``threshold``, ``bits``,
+    ``auto_compact_max_dirs``, ``compact_kw``)."""
+    # an unknown option fails here, not inside the first micro-batch
+    inspect.signature(ingest_semdedup_batch).bind(None, None, 0, **opts)
+    return _run_sink(
+        stream,
+        checkpoint,
+        lambda batch, epoch_id, run_id: ingest_semdedup_batch(
+            batch, index_path, epoch_id, run_id=run_id, **opts
+        ),
     )
 
 
@@ -954,7 +901,6 @@ def ingest_semdedup_batch(
     clustered compaction default."""
     from hapiy_etl_spark.functions import sign_bucket
     from hapiy_etl_spark.operators.similarity import cosine
-    from hapiy_etl_spark.operators.txstore import TxTable
 
     spark = batch.sparkSession
     bucketed = batch.withColumn(
@@ -999,24 +945,8 @@ def ingest_semdedup_batch(
                     "near-duplicates would be silently admitted; pass "
                     "the index's own bits"
                 )
-            if idx.n_dirs() > 2:
-                # ≤ 2^bits tiny rows: the bucket list that prunes the
-                # index read to the batch's own buckets' dirs — exact,
-                # because dedup only ever joins on bucket equality (an
-                # all-NULL-vector batch has no buckets and skips the
-                # probe entirely)
-                present = sorted(
-                    r[0] for r in b.select("bucket").distinct().collect()
-                )
-                raw = (
-                    idx.read(where_in={"bucket": present})
-                    if present
-                    else None
-                )
-            else:
-                # 1-2 dirs: the distinct-bucket collect would cost more
-                # than it prunes
-                raw = idx.read()
+            # an all-NULL-vector batch has no buckets and skips the probe
+            raw = _bucket_pruned_probe(idx, b, "bucket")
             if raw is not None:
                 stored = raw.select(
                     F.col(id_col).alias("__did"),
@@ -1038,35 +968,9 @@ def ingest_semdedup_batch(
             stats_cols=["bucket"],
             extra_meta={"bits": bits},
         )
-        if appended and auto_compact_max_dirs:
-            from hapiy_etl_spark.operators.maintenance import auto_compact
-
-            if compact_kw is None and idx.n_dirs() >= auto_compact_max_dirs:
-                # derived dir count (VERDICT r10 item 4): grows with
-                # index rows until one dir per sign bucket (2^bits),
-                # always under the threshold (amortized policy), dirs
-                # bucket-tight for the pruned per-tick read. Derivation
-                # gated on the policy's own fire condition (review r11:
-                # an unconditional count() was a full index scan on
-                # every non-compacting tick).
-                from hapiy_etl_spark.operators.maintenance import (
-                    sized_cluster_dirs,
-                )
-
-                compact_kw = {
-                    "cluster_by": "bucket",
-                    "n_dirs": sized_cluster_dirs(
-                        idx.read().count(),
-                        1 << bits,
-                        auto_compact_max_dirs,
-                    ),
-                }
-            elif compact_kw is None:
-                return  # under threshold: auto_compact would noop
-            auto_compact(
-                TxTable(spark, index_path),
-                auto_compact_max_dirs,
-                **compact_kw,
+        if appended:
+            _compact_after_append(
+                idx, auto_compact_max_dirs, compact_kw, "bucket", 1 << bits
             )
     finally:
         bucketed.unpersist()
@@ -1120,8 +1024,8 @@ def heal_index_from_changes(
     handoff (pair it with a FRESH checkpoint): stream only the appends
     AFTER that corpus version — the restart half of the
     ``heal_recover_from_rewrite`` runbook. Returns the StreamingQuery
-    (AvailableNow)."""
-    from hapiy_etl_spark.operators.txstore import TxTable
+    (AvailableNow, or ``trigger_processing_time`` for the always-on
+    posture — see ``_run_sink``)."""
     from hapiy_etl_spark.sources import txtable_source
 
     txtable_source.register(spark)
@@ -1136,15 +1040,8 @@ def heal_index_from_changes(
     # starting_version=0 must pass through, not silently behave as unset
     if starting_version is not None:
         reader = reader.option("startingVersion", str(starting_version))
-    stream = reader.load()
-    run_id = None
 
-    def _sink(batch: DataFrame, epoch_id: int) -> None:
-        nonlocal run_id
-        if batch.isEmpty():
-            return
-        if run_id is None:
-            run_id = _checkpoint_run_id(checkpoint)
+    def _heal(batch: DataFrame, epoch_id: int, run_id: str | None) -> None:
         appended = tx_append_once(
             build_fn(batch),
             index_path,
@@ -1157,33 +1054,14 @@ def heal_index_from_changes(
             # record a DISAGREEING geometry as the authoritative newest
             extra_meta=extra_meta,
         )
-        if appended and auto_compact_max_dirs:
-            from hapiy_etl_spark.operators.maintenance import auto_compact
-
-            auto_compact(
+        if appended:
+            _compact_after_append(
                 TxTable(batch.sparkSession, index_path),
                 auto_compact_max_dirs,
-                **(compact_kw or {}),
+                compact_kw,
             )
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        # default: one bounded drain (availableNow). Pass
-        # trigger_processing_time (e.g. "2 seconds") for the ALWAYS-ON
-        # posture: ONE long-running query keeps polling the commit log
-        # and healing new versions as they land — no restart loop; the
-        # exactly-once machinery ((run, epoch) replay state + engine
-        # checkpoint) is identical in both modes.
-        .trigger(
-            **(
-                {"processingTime": trigger_processing_time}
-                if trigger_processing_time
-                else {"availableNow": True}
-            )
-        )
-        .start()
-    )
+    return _run_sink(reader.load(), checkpoint, _heal, trigger_processing_time)
 
 
 def heal_recover_from_rewrite(
@@ -1232,10 +1110,7 @@ def heal_recover_from_rewrite(
     After this returns, the index equals a one-shot build over the
     snapshot's keyed rows — the same invariant healed appends
     maintain."""
-    from pyspark.sql import functions as F
-
     from hapiy_etl_spark.operators.maintenance import reconcile_index_deletes
-    from hapiy_etl_spark.operators.txstore import TxTable
 
     c_on = corpus_on or on
     corpus = TxTable(spark, corpus_path)
@@ -1332,16 +1207,8 @@ def foreach_batch_tx_append_with_mv(
     distinct count and the top-k maintain incrementally, because
     sketches merge."""
     from hapiy_etl_spark.operators.incremental_mv import IncrementalAggView
-    from hapiy_etl_spark.operators.txstore import TxTable
 
-    run_id = None
-
-    def _sink(batch: DataFrame, epoch_id: int) -> None:
-        nonlocal run_id
-        if batch.isEmpty():
-            return
-        if run_id is None:
-            run_id = _checkpoint_run_id(checkpoint)
+    def _append_refresh(batch: DataFrame, epoch_id: int, run_id: str | None) -> None:
         spark = batch.sparkSession
         tx_append_once(batch, path, epoch_id, run_id=run_id)
         IncrementalAggView(
@@ -1360,12 +1227,7 @@ def foreach_batch_tx_append_with_mv(
             topk_track=topk_track,
         ).refresh()
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_sink(stream, checkpoint, _append_refresh)
 
 
 def foreach_batch_tx_append_with_join_mv(
@@ -1392,16 +1254,8 @@ def foreach_batch_tx_append_with_join_mv(
     replayed epoch skips the append, the two-source dir-diff sees
     nothing new, and the view inherits exactly-once."""
     from hapiy_etl_spark.operators.incremental_mv import IncrementalJoinAggView
-    from hapiy_etl_spark.operators.txstore import TxTable
 
-    run_id = None
-
-    def _sink(batch: DataFrame, epoch_id: int) -> None:
-        nonlocal run_id
-        if batch.isEmpty():
-            return
-        if run_id is None:
-            run_id = _checkpoint_run_id(checkpoint)
+    def _append_refresh(batch: DataFrame, epoch_id: int, run_id: str | None) -> None:
         spark = batch.sparkSession
         tx_append_once(batch, path, epoch_id, run_id=run_id)
         dim = TxTable(spark, dim_path)
@@ -1434,9 +1288,4 @@ def foreach_batch_tx_append_with_join_mv(
             value_cols=value_cols,
         ).refresh()
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_sink(stream, checkpoint, _append_refresh)

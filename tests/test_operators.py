@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hapiy_etl_spark.operators.asof import asof_join, interval_overlap_join
-from hapiy_etl_spark.operators.upsert import dedup_by_key, upsert_by_key, upsert_parquet
+from hapiy_etl_spark.operators.upsert import dedup_by_key, upsert_by_key
 from hapiy_etl_spark.operators.watermark import WatermarkStore
 
 
@@ -113,14 +113,16 @@ def test_upsert_by_key_semantics(spark):
     assert out == {"a": 1, "b": 20, "c": 30}
 
 
-def test_upsert_parquet_idempotent(spark, tmp_path):
-    path = str(tmp_path / "state")
+def test_txtable_merge_redelivery_idempotent(spark, tmp_path):
+    from hapiy_etl_spark.operators.txstore import TxTable
+
+    table = TxTable(spark, str(tmp_path / "state"))
     batch = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
-    upsert_parquet(spark, batch, path, ["k"])
-    upsert_parquet(spark, batch, path, ["k"])  # re-delivery is a no-op
-    assert spark.read.parquet(path).count() == 2
-    upsert_parquet(spark, spark.createDataFrame([("b", 99)], "k string, v int"), path, ["k"])
-    out = {r.k: r.v for r in spark.read.parquet(path).collect()}
+    table.merge(batch, ["k"])
+    table.merge(batch, ["k"])  # re-delivery is a no-op
+    assert table.read().count() == 2
+    table.merge(spark.createDataFrame([("b", 99)], "k string, v int"), ["k"])
+    out = {r.k: r.v for r in table.read().collect()}
     assert out == {"a": 1, "b": 99}
 
 

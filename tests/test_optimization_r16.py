@@ -82,6 +82,50 @@ def test_pq_codebooks_serial_fallback_matches(monkeypatch):
     assert np.array_equal(out, _serial_codebooks(sample, 8, 64, seed=42))
 
 
+def test_pq_codebooks_hung_pool_falls_back_to_serial(monkeypatch):
+    # a spawn pool whose workers never come up (a main script without a
+    # __main__ guard) must not hang the fit: the creation probe times
+    # out, the pool is marked broken and shut down, and the fit is serial
+    import concurrent.futures
+    import threading
+
+    import hapiy_etl_spark.operators.similarity as S
+
+    release = threading.Event()
+
+    class _HungPool:
+        def __init__(self, *args, **kwargs):
+            pass
+
+        def submit(self, fn, *args):
+            return concurrent.futures.Future()  # never completes
+
+        def map(self, *args, **kwargs):
+            release.wait()  # a hung pool.map blocks until teardown
+            raise RuntimeError("hung pool released")
+
+        def shutdown(self, wait=True, cancel_futures=False):
+            release.set()
+
+    monkeypatch.setattr(concurrent.futures, "ProcessPoolExecutor", _HungPool)
+    monkeypatch.setattr(S, "_PQ_FIT_POOL_PROBE_S", 0.5)
+    monkeypatch.setattr(S, "_PQ_FIT_POOL_BROKEN", False)
+    monkeypatch.setattr(S, "_PQ_FIT_POOL", None)
+    rng = np.random.RandomState(5)
+    sample = rng.randn(300, 32)
+    out = {}
+    fit = threading.Thread(
+        target=lambda: out.update(books=S._pq_codebooks(sample, 8, 64, seed=42)),
+        daemon=True,
+    )
+    fit.start()
+    fit.join(timeout=30)
+    release.set()
+    assert not fit.is_alive(), "PQ fit hung on a pool that never started"
+    assert np.array_equal(out["books"], _serial_codebooks(sample, 8, 64, seed=42))
+    assert S._PQ_FIT_POOL_BROKEN and S._PQ_FIT_POOL is None
+
+
 def test_grouped_bloom_collect_is_one_row_per_group(spark, tmp_path):
     # the r16 executor-side fold: entries byte-identical to per-dir AND
     # the driver-side materialization bounded at n_groups rows

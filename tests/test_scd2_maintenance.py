@@ -7,7 +7,8 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from hapiy_etl_spark.io import read_table
-from hapiy_etl_spark.operators.maintenance import compact_parquet, stratified_sample
+from hapiy_etl_spark.operators.maintenance import stratified_sample
+from hapiy_etl_spark.operators.txstore import TxTable
 from hapiy_etl_spark.operators.scd2 import OPEN_TS, scd2_apply, scd2_as_of, scd2_current, scd2_init
 
 
@@ -56,17 +57,21 @@ def test_scd2_idempotent_redelivery(spark):
     assert dim2.count() == 1
 
 
-def test_compact_parquet(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "shattered")
+def test_txtable_optimize_compacts_small_files(spark, sf_dir, tmp_path):
+    path = tmp_path / "shattered"
     src = read_table(spark, sf_dir, "orders")
-    src.repartition(16).write.parquet(path)
-    from pathlib import Path
+    table = TxTable(spark, str(path))
+    table.append(src.repartition(16))
 
-    before = sum(1 for p in Path(path).rglob("*.parquet"))
+    def n_files(dirs):
+        return sum(1 for d in dirs for _ in (path / "data" / d).rglob("*.parquet"))
+
+    before = n_files(table._manifest(table.latest_version())["dirs"])
     assert before >= 16
-    after = compact_parquet(spark, path, target_files=2)
-    assert after <= 2
-    assert spark.read.parquet(path).count() == src.count()
+    table.optimize(target_partitions=2)
+    (new_dir,) = table._manifest(table.latest_version())["dirs"]
+    assert n_files([new_dir]) <= 2
+    assert table.read().count() == src.count()
 
 
 def test_stratified_sample(spark, sf_dir):
@@ -97,7 +102,7 @@ def test_table_format_gateway_graceful(spark):
     if delta_available(spark):  # environment-dependent: native path exists
         return
     batch = spark.createDataFrame([(1, "a")], "id long, v string")
-    with _pytest.raises(NotImplementedError, match="upsert_parquet"):
+    with _pytest.raises(NotImplementedError, match="TxTable.merge"):
         merge_upsert(spark, "/tmp/nope", batch, ["id"])
 
 

@@ -6,8 +6,11 @@ completes on the real events data via AvailableNow micro-batches, and
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
+from hapiy_etl_spark.operators.txstore import TxTable
 from hapiy_etl_spark.queries.events import window_tumbling
 from hapiy_etl_spark.streaming.jobs import (
     foreach_batch_upsert,
@@ -75,12 +78,11 @@ def test_checkpoint_recovery_no_reprocessing(spark, sf_dir, tmp_path):
 
     for run in range(2):
         events = read_events_stream(spark, sf_dir).select("event_id", "user_id", "value")
-        from hapiy_etl_spark.operators.upsert import upsert_parquet
 
         def _sink(batch, epoch_id, _run=run):
             if not batch.isEmpty():
                 seen_batches.append((_run, epoch_id, batch.count()))
-                upsert_parquet(batch.sparkSession, batch, sink, ["event_id"])
+                TxTable(batch.sparkSession, sink).merge(batch, ["event_id"])
 
         q = (
             events.writeStream.foreachBatch(_sink)
@@ -94,7 +96,7 @@ def test_checkpoint_recovery_no_reprocessing(spark, sf_dir, tmp_path):
     assert any(r == 0 for r, _, _ in seen_batches)
     assert not any(r == 1 for r, _, _ in seen_batches)
     n_src = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert spark.read.parquet(sink).count() == n_src
+    assert TxTable(spark, sink).read().count() == n_src
 
 
 def test_foreach_batch_upsert_sink(spark, sf_dir, tmp_path):
@@ -106,10 +108,48 @@ def test_foreach_batch_upsert_sink(spark, sf_dir, tmp_path):
         checkpoint=str(tmp_path / "ckpt"),
     )
     q.awaitTermination()
-    out = spark.read.parquet(str(tmp_path / "sink"))
+    out = TxTable(spark, str(tmp_path / "sink")).read()
     src_n = read_events_stream(spark, sf_dir).sparkSession.read.parquet(f"{sf_dir}/events.parquet").count()
     assert out.count() == src_n
     assert out.select("event_id").distinct().count() == src_n
+
+
+def test_foreach_batch_upsert_failed_commit_keeps_previous_batch(spark, tmp_path, monkeypatch):
+    """A crash inside the second micro-batch's commit (after its data dir
+    is written, before its manifest is published) must leave the sink
+    table readable with exactly the first batch's rows — the window in
+    which a write-temp, delete-live, move-temp swap lost the table."""
+    import pytest
+
+    src = tmp_path / "src"
+    first = [(1, "a"), (2, "b")]
+    spark.createDataFrame(first, "k long, v string").coalesce(1).write.parquet(str(src / "p1"))
+    spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string").coalesce(1).write.parquet(
+        str(src / "p2")
+    )
+    for f in (src / "p2").glob("*.parquet"):  # the file source replays oldest first
+        os.utime(f, (f.stat().st_atime, f.stat().st_mtime + 60))
+    stream = (
+        spark.readStream.schema("k long, v string")
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(str(src))
+    )
+    publish, calls = TxTable._publish_manifest, []
+
+    def crash_on_second(self, manifest):
+        calls.append(manifest["version"])
+        if len(calls) == 2:
+            raise RuntimeError("killed before the manifest publish")
+        return publish(self, manifest)
+
+    monkeypatch.setattr(TxTable, "_publish_manifest", crash_on_second)
+    sink = str(tmp_path / "sink")
+    q = foreach_batch_upsert(stream, sink, keys=["k"], checkpoint=str(tmp_path / "ckpt"))
+    with pytest.raises(Exception, match="killed before the manifest publish"):
+        q.awaitTermination()
+    assert len(calls) == 2
+    assert sorted(tuple(r) for r in TxTable(spark, sink).read().collect()) == first
 
 
 def test_foreach_batch_kmv_rollup_equals_batch_and_is_idempotent(spark, sf_dir, tmp_path):
@@ -139,7 +179,7 @@ def test_foreach_batch_kmv_rollup_equals_batch_and_is_idempotent(spark, sf_dir, 
     run("ckpt1")
     state = {
         r.event_type: tuple(r.sketch)
-        for r in spark.read.parquet(sink).collect()
+        for r in TxTable(spark, sink).read().collect()
     }
     batch = {
         r.event_type: tuple(r.sketch)
@@ -156,7 +196,7 @@ def test_foreach_batch_kmv_rollup_equals_batch_and_is_idempotent(spark, sf_dir, 
     run("ckpt2")
     replayed = {
         r.event_type: tuple(r.sketch)
-        for r in spark.read.parquet(sink).collect()
+        for r in TxTable(spark, sink).read().collect()
     }
     assert replayed == state
 
@@ -168,7 +208,7 @@ def test_foreach_batch_kmv_rollup_equals_batch_and_is_idempotent(spark, sf_dir, 
         .agg(F.countDistinct("user_id").alias("n"))
         .collect()
     }
-    sk = spark.read.parquet(sink)
+    sk = TxTable(spark, sink).read()
     est = {
         r.event_type: r.est
         for r in sk.select("event_type", kmv_estimate(F.col("sketch"), K).alias("est")).collect()

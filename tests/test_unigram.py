@@ -177,6 +177,34 @@ def test_train_keeps_every_char_and_is_deterministic(spark):
     assert {"a", "b", "c", "d", "n"} <= pieces
 
 
+def test_train_checkpoints_rdd_backed_input(spark, monkeypatch):
+    # an RDD-backed type table is still an unmaterialized lineage (its
+    # RDD re-runs on every scan); unigram_train must checkpoint it like
+    # any other input instead of trusting the plan's root node
+    types = [("banana", 5), ("bandana", 2), ("cabana", 3)]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(types), "word string, cnt long"
+    )
+    checkpointed = []
+    real = type(df).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", spy)
+    got = unigram_train(df, rounds=2, l_max=3, seed_n=8, vocab_n=4)
+    assert any(c is df for c in checkpointed)
+    monkeypatch.undo()
+    want = unigram_train(
+        spark.createDataFrame(types, "word string, cnt long"),
+        rounds=2, l_max=3, seed_n=8, vocab_n=4,
+    )
+    assert sorted(tuple(r) for r in got.collect()) == sorted(
+        tuple(r) for r in want.collect()
+    )
+
+
 def test_encode_roundtrips_corpus_words(spark):
     from pyspark.sql import functions as F
 
