@@ -321,46 +321,59 @@ def minhash_signatures(
     signatures computed by ANY engine (or cluster version) agree —
     store these in a table and dedup future batches against history
     without rescanning a byte of corpus text (dedup_against_index)."""
-    params = _hash_params(num_hashes, seed)
-    if portable:
-        base_h = F.pmod(
-            F.conv(F.substring(F.md5(F.col("s")), 1, 14), 16, 10).cast("long"),
-            F.lit(_MERSENNE31),
-        )
-    else:
-        base_h = F.pmod(F.xxhash64("s"), F.lit(_MERSENNE31))
+    base_h = (
+        f"pmod(cast(conv(substring(md5(s), 1, 14), 16, 10) AS BIGINT), {_MERSENNE31})"
+        if portable
+        else f"pmod(xxhash64(s), {_MERSENNE31})"
+    )
+    mins = ", ".join(
+        f"min((h * {a} + {b}) % {_MERSENNE31})"
+        for a, b in _hash_params(num_hashes, seed)
+    )
     # NOT spread (io.py): measured at sf0.1 — the tokenless 8-byte hash
     # map stage is too cheap for the extra exchange to pay (5-rep
     # standalone medians 0.77 -> 0.79/0.92 s with spread)
     sh = df.select(
         F.col(id_col).alias("doc"), F.explode(shingles(text_col, n)).alias("s")
-    ).select("doc", base_h.alias("h"))
-    sig = sh.groupBy("doc").agg(
-        *[
-            F.min((F.col("h") * a + b) % _MERSENNE31).alias(f"m{i}")
-            for i, (a, b) in enumerate(params)
-        ]
-    )
-    return sig.select(
-        "doc", F.array(*[F.col(f"m{i}") for i in range(num_hashes)]).alias("sig")
-    )
+    ).selectExpr("doc", f"{base_h} AS h")
+    return sh.groupBy("doc").agg(F.expr(f"array({mins})").alias("sig"))
 
 
-def _band_key_col(j: int, band_size: int, portable: bool) -> Column:
-    """Band j's join key derived from the ``sig`` array column — the
-    ONE implementation of band-key arithmetic, shared by the banding
-    projection (minhash_bands) and the persisted band-postings layout
-    (band_postings) so the two can never disagree. Portable mode joins
-    on the raw component-concat string (engine-agnostic); default
-    hashes it to a fixed-width 8-byte shuffle key."""
-    concat = F.concat_ws(
-        ",",
-        *[
-            F.element_at("sig", j * band_size + r + 1).cast("string")
+# The MinHash plans below are SQL text (F.expr/selectExpr), not F.*
+# Column trees: every Column node built from Python is several py4j
+# round trips to the JVM (~1.5 ms each for a bare F.col on a 4-vCPU
+# host), so a 16-hash signature plus 8 band structs cost ~2,500 round
+# trips per batch, while Catalyst parses the same expressions from one
+# string per call. Types and values are those of the Column forms.
+
+
+def _band_structs_sql(num_hashes: int, band_size: int, portable: bool) -> str:
+    """``array(named_struct('band', j, 'key', <key j>), ...)`` over the
+    ``sig`` column — the ONE implementation of band-key arithmetic,
+    shared by the banding projection (minhash_bands) and the persisted
+    band-postings layout (band_postings) so the two can never disagree.
+    Portable mode joins on the raw component-concat string
+    (engine-agnostic); default hashes it to a fixed-width 8-byte
+    shuffle key."""
+    structs = []
+    for j in range(num_hashes // band_size):
+        key = "concat_ws(',', " + ", ".join(
+            f"cast(element_at(sig, {j * band_size + r + 1}) AS STRING)"
             for r in range(band_size)
-        ],
+        ) + ")"
+        if not portable:
+            key = f"xxhash64({key})"
+        structs.append(f"named_struct('band', {j}, 'key', {key})")
+    return f"array({', '.join(structs)})"
+
+
+def _jaccard_est_sql(sig_a: str, sig_b: str, num_hashes: int) -> str:
+    """Signature-agreement Jaccard estimate of two sig columns, rounded
+    to 6 places: matching components / num_hashes."""
+    return (
+        f"round(size(filter(zip_with({sig_a}, {sig_b}, (x, y) -> x = y), "
+        f"t -> t)) / {num_hashes}, 6)"
     )
-    return concat if portable else F.xxhash64(concat)
 
 
 def minhash_bands(
@@ -374,18 +387,8 @@ def minhash_bands(
     Key geometry must match the signatures' ``portable`` flag: raw
     component-concat strings (engine-agnostic) or xxhash64 of them
     (fixed-width shuffle keys, the default)."""
-    n_bands = num_hashes // band_size
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                _band_key_col(j, band_size, portable).alias("key"),
-            )
-            for j in range(n_bands)
-        ]
-    )
-    return sigs.select("doc", F.explode(band_structs).alias("bk")).select(
-        "doc", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    return sigs.selectExpr(
+        "doc", f"inline({_band_structs_sql(num_hashes, band_size, portable)})"
     )
 
 
@@ -460,25 +463,13 @@ def band_postings(
     the index read to their dirs, instead of scanning the whole index
     every micro-batch. Row width is n_bands × (sig + two ints) per
     document — still a narrow fraction of corpus text."""
-    n_bands = num_hashes // band_size
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                _band_key_col(j, band_size, portable).alias("key"),
-            )
-            for j in range(n_bands)
-        ]
-    )
-    return (
-        sigs.select("doc", "sig", F.explode(band_structs).alias("bk"))
-        .select(
-            band_bucket(F.col("bk.band"), F.col("bk.key"), n_buckets).alias("bb"),
-            F.col("bk.band").alias("band"),
-            F.col("bk.key").alias("key"),
-            "doc",
-            "sig",
-        )
+    structs = _band_structs_sql(num_hashes, band_size, portable)
+    return sigs.selectExpr("doc", "sig", f"inline({structs})").select(
+        band_bucket(F.col("band"), F.col("key"), n_buckets).alias("bb"),
+        "band",
+        "key",
+        "doc",
+        "sig",
     )
 
 
@@ -508,20 +499,14 @@ def dedup_against_band_index(
             (F.col("b.band") == F.col("i.band"))
             & (F.col("b.key") == F.col("i.key")),
         )
-        .select(
-            F.col("b.doc").alias("new_id"),
-            F.col("i.doc").alias("dup_of"),
-            F.col("i.sig").alias("sig_i"),
-        )
+        .selectExpr("b.doc AS new_id", "i.doc AS dup_of", "i.sig AS sig_i")
         .dropDuplicates(["new_id", "dup_of"])
     )
-    sb = batch_sigs.select(F.col("doc").alias("new_id"), F.col("sig").alias("sig_b"))
-    est = F.size(
-        F.filter(F.zip_with("sig_b", "sig_i", lambda x, y: x == y), lambda t: t)
-    ) / F.lit(num_hashes)
+    sb = batch_sigs.selectExpr("doc AS new_id", "sig AS sig_b")
+    est = _jaccard_est_sql("sig_b", "sig_i", num_hashes)
     return (
         cand.join(sb, "new_id")
-        .select("new_id", "dup_of", F.round(est, 6).alias("jaccard_est"))
+        .selectExpr("new_id", "dup_of", f"{est} AS jaccard_est")
         .where(F.col("jaccard_est") >= jaccard_threshold)
     )
 
@@ -556,20 +541,16 @@ def dedup_against_index(
             (F.col("b.band") == F.col("i.band"))
             & (F.col("b.key") == F.col("i.key")),
         )
-        .select(
-            F.col("b.doc").alias("new_id"), F.col("i.doc").alias("dup_of")
-        )
+        .selectExpr("b.doc AS new_id", "i.doc AS dup_of")
         .dropDuplicates(["new_id", "dup_of"])
     )
-    sb = batch_sigs.select(F.col("doc").alias("new_id"), F.col("sig").alias("sig_b"))
-    si = index_sigs.select(F.col("doc").alias("dup_of"), F.col("sig").alias("sig_i"))
-    est = F.size(
-        F.filter(F.zip_with("sig_b", "sig_i", lambda x, y: x == y), lambda t: t)
-    ) / F.lit(num_hashes)
+    sb = batch_sigs.selectExpr("doc AS new_id", "sig AS sig_b")
+    si = index_sigs.selectExpr("doc AS dup_of", "sig AS sig_i")
+    est = _jaccard_est_sql("sig_b", "sig_i", num_hashes)
     return (
         cand.join(sb, "new_id")
         .join(si, "dup_of")
-        .select("new_id", "dup_of", F.round(est, 6).alias("jaccard_est"))
+        .selectExpr("new_id", "dup_of", f"{est} AS jaccard_est")
         .where(F.col("jaccard_est") >= jaccard_threshold)
     )
 
@@ -629,15 +610,13 @@ def minhash_native_pairs(
         .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    sa = sig_arr.select(F.col("doc").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig_arr.select(F.col("doc").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda t: t)
-    ) / F.lit(num_hashes)
+    sa = sig_arr.selectExpr("doc AS id_a", "sig AS sig_a")
+    sb = sig_arr.selectExpr("doc AS id_b", "sig AS sig_b")
+    est = _jaccard_est_sql("sig_a", "sig_b", num_hashes)
     return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
-        .select("id_a", "id_b", F.round(est, 6).alias("jaccard_est"))
+        .selectExpr("id_a", "id_b", f"{est} AS jaccard_est")
         .where(F.col("jaccard_est") >= jaccard_threshold)
     )
 

@@ -48,14 +48,16 @@ class WatermarkStore:
         agg(max) is a partial-aggregated reduction — one number crosses
         the shuffle, regardless of batch size.
         """
-        row = df.agg(F.max(ts_col).alias("m")).first()
-        new = row["m"]
-        if new is None:
-            return self.get(source)
+        return self.advance_to(source, df.agg(F.max(ts_col)).first()[0])
+
+    def advance_to(self, source: str, ts: dt.datetime | None) -> dt.datetime | None:
+        """Raise the watermark to ``ts`` (never lowers it; a NULL ``ts``
+        — a batch with no timestamps — leaves it unchanged). Returns the
+        watermark after the call."""
         cur = self.get(source)
-        if cur is None or new > cur:
-            self.set(source, new)
-            return new
+        if ts is not None and (cur is None or ts > cur):
+            self.set(source, ts)
+            return ts
         return cur
 
     def incremental_filter(self, source: str, df: DataFrame, ts_col: str) -> DataFrame:

@@ -35,7 +35,9 @@ from __future__ import annotations
 import logging
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from hapiy_etl_spark.operators.metrics import observed
 from hapiy_etl_spark.operators.txstore import TxTable
 from hapiy_etl_spark.operators.watermark import WatermarkStore
 from hapiy_etl_spark.pipeline.ingest import (
@@ -98,8 +100,16 @@ class TxCommitsPipeline:
         repo = self.config.repo
         since = self._wm.get(repo)
         wire = self.source.fetch(spark, since)
-        parsed = parse_commits(wire, repo)
-        n = parsed.count()
+        # one pass over the wire batch: the pin materializes the tick,
+        # and its count and newest commit_ts ride it as observed metrics
+        parsed, seen = observed(
+            parse_commits(wire, repo),
+            "tick",
+            F.count(F.lit(1)).alias("n"),
+            F.max("commit_ts").alias("newest"),
+        )
+        parsed = parsed.localCheckpoint(eager=True)
+        n = seen.get["n"]
         log.info("tick: %d commits for %s since %s", n, repo, since)  # R15
         if n == 0:
             return 0
@@ -124,7 +134,7 @@ class TxCommitsPipeline:
                 allow_missing_columns=evolve,
                 partition_by=["repo"],
             )
-        self._wm.advance_from(repo, parsed, "commit_ts")
+        self._wm.advance_to(repo, seen.get["newest"])
         return n
 
     def _append_tick(self, parsed: DataFrame) -> int:

@@ -295,20 +295,6 @@ def _compact_after_append(
     auto_compact(table, max_dirs, **(kw or {}))
 
 
-def _bucket_pruned_probe(index: TxTable, batch_buckets: DataFrame, col: str):
-    """The index rows a batch can collide with. Dedup only ever joins on
-    ``col`` equality, so reading just the dirs that may hold the batch's
-    own buckets (``where_in``) is exact, and per-tick read cost tracks
-    the batch's bucket spread, not corpus age. The distinct-bucket collect (≤ n_buckets tiny
-    rows) is the only driver round-trip; a 1-2 dir index is read whole,
-    because the collect would cost more than it prunes. None when the
-    batch has no buckets (nothing to probe)."""
-    if index.n_dirs() <= 2:
-        return index.read()
-    present = sorted(r[0] for r in batch_buckets.select(col).distinct().collect())
-    return index.read(where_in={col: present}) if present else None
-
-
 def foreach_batch_upsert(
     stream: DataFrame, path: str, keys: Sequence[str], checkpoint: str
 ):
@@ -527,13 +513,14 @@ def foreach_batch_ingest_dedup(
 ):
     """Streaming ingestion with ONLINE near-dedup — the front door of a
     training-data pipeline: each micro-batch computes its MinHash
-    signatures once, drops documents that near-dup the CORPUS (band
-    join against the persisted signature index — corpus text never
-    rescanned) or a LOWER-id document of the same batch (greedy
-    keep-first; the exact cluster pick is the batch pipeline's job),
-    then appends the surviving rows to the corpus TxTable and their
-    signature BAND POSTINGS to the index — both exactly-once (the
-    ``tx_append_once`` replay check on each table) and ATOMICALLY
+    signatures and band postings once (pinned), drops documents that
+    near-dup the CORPUS (the persisted signature index — corpus text
+    never rescanned) or a LOWER-id document of the same batch (greedy
+    keep-first; the exact cluster pick is the batch pipeline's job) in
+    ONE band join of its postings against themselves plus the pruned
+    index rows, then appends the surviving rows to the corpus TxTable
+    and their signature BAND POSTINGS to the index — both exactly-once
+    (the ``tx_append_once`` replay check on each table) and ATOMICALLY
     (one ``txgroup_commit_appends`` record) with the same (run, epoch).
 
     The index holds ``dedup.band_postings`` rows keyed by a ``bb``
@@ -592,6 +579,12 @@ def foreach_batch_ingest_dedup(
     )
 
 
+# bound on a batch's band postings (rows × row-width bound) for a
+# broadcast decision join in ingest_dedup_batch; larger batches shuffle
+# both sides. Half the session's 64 MB autoBroadcastJoinThreshold.
+_DECISION_BROADCAST_BYTES = 32 * 1024 * 1024
+
+
 def ingest_dedup_batch(
     batch: DataFrame,
     corpus_path: str,
@@ -621,6 +614,13 @@ def ingest_dedup_batch(
     read, the atomic two-table group commit, and the per-table
     compaction kwargs.
 
+    Spark work per batch: one eager ``localCheckpoint`` pins the band
+    postings (its observed ``collect_set`` yields the present ``bb``
+    buckets), one ``where_in`` index read, one checkpointed band join
+    that decides every drop, then the group commit. The survivors are
+    those of the two-join form (``dedup_against_index`` self-join
+    keeping ``new_id > dup_of`` ∪ ``dedup_against_band_index``).
+
     ``extra_appends`` (r15, VERDICT r14 item 8): a callable
     ``survivors -> list[dict]`` producing FURTHER per-epoch appends —
     each ``{"table": TxTable (or "path": str), "df": DataFrame,
@@ -636,11 +636,11 @@ def ingest_dedup_batch(
 
     from hapiy_etl_spark.operators.dedup import (
         N_BAND_BUCKETS,
+        _jaccard_est_sql,
         band_postings,
-        dedup_against_band_index,
-        dedup_against_index,
         minhash_signatures,
     )
+    from hapiy_etl_spark.operators.metrics import observed
     from hapiy_etl_spark.operators.txstore import (
         txgroup_commit_appends,
         txgroup_recover,
@@ -661,12 +661,6 @@ def ingest_dedup_batch(
     # BEFORE the dedup decision reads either table (one empty listing
     # in the steady state)
     txgroup_recover(spark, group_path)
-    mh_kw = dict(
-        num_hashes=num_hashes,
-        band_size=band_size,
-        jaccard_threshold=jaccard_threshold,
-        portable=portable,
-    )
     sigs = minhash_signatures(
         # NULL-text docs are excluded from dedup entirely (the
         # shingle kernel would otherwise give every one the same
@@ -677,165 +671,175 @@ def ingest_dedup_batch(
         n,
         num_hashes,
         portable=portable,
-    ).persist()
-    # the batch's band postings double as (a) the bucket list pruning
-    # the index read and (b) the surviving rows' landing payload —
-    # computed once, cut twice
-    bp = band_postings(
-        sigs, num_hashes, band_size, portable, n_band_buckets
-    ).persist()
-    try:
-        # batch-internal greedy keep-first: both directions come out
-        # of the self band-join; keeping new_id > dup_of drops the
-        # higher id of every colliding pair (and discards self-pairs)
-        drop = (
-            dedup_against_index(sigs, sigs, **mh_kw)
-            .where(F.col("new_id") > F.col("dup_of"))
-            .select(F.col("new_id").alias("doc"))
-        )
-        sig_t = TxTable(spark, sig_path)
-        if sig_t.latest_version() > 0:
-            from hapiy_etl_spark.operators.textindex import recorded_stamp
+    )
+    # the batch's band postings are the bucket list pruning the index
+    # read, both sides of the decision join and the survivors' landing
+    # payload — pinned once; the bucket list rides the pin as an
+    # observed metric, so it costs no extra job
+    bp, seen = observed(
+        band_postings(sigs, num_hashes, band_size, portable, n_band_buckets),
+        "dedup_batch_buckets",
+        F.collect_set("bb").alias("bbs"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    bp = bp.localCheckpoint(eager=True)
+    other_cols = ("band", "key", "doc AS dup_of", "sig AS sig_o")
+    others = bp.selectExpr(*other_cols, "false AS indexed")
+    sig_t = TxTable(spark, sig_path)
+    if sig_t.latest_version() > 0:
+        from hapiy_etl_spark.operators.textindex import recorded_stamp
 
-            # geometry validation (review r10): a mismatched bucket
-            # modulus, band layout, or key kind never ERRORS on its own
-            # — batch band/bucket values simply stop matching stored
-            # ones and true duplicates are silently admitted. Every
-            # append stamps its geometry; disagreeing callers fail loud.
-            rec = None
-            for gk, want in geom_stamp.items():
-                rec_k = recorded_stamp(sig_t, gk)
-                if gk == "n_band_buckets":
-                    rec = rec_k
-                if rec_k is not None and rec_k != int(want):
-                    raise ValueError(
-                        f"deduping with {gk}={want} against a signature "
-                        f"index built with {gk}={rec_k} at {sig_path} — "
-                        "band/bucket arithmetic would disagree and "
-                        "collisions would be silently missed; pass the "
-                        "index's own geometry"
-                    )
-            # layout check from the manifest's recorded newest-dir
-            # schema — one JSON read, not a multi-dir DataFrame built
-            # per unstamped tick just to inspect .columns (ADVICE r10)
-            cols = (
-                sig_t.recorded_columns() or sig_t.read().columns
-                if rec is None
-                else None
-            )
-            if rec is None and "bb" not in cols:
-                raise RuntimeError(
-                    f"signature index at {sig_path} uses the pre-r10 "
-                    "(doc, sig) layout — the online-dedup sink now "
-                    "lands band postings (bb, band, key, doc, sig). "
-                    "Rebuild the index from the corpus (one "
-                    "minhash_signatures + band_postings pass over "
-                    "surviving text, or replay via "
-                    "heal_index_from_changes) before resuming the "
-                    "stream"
+        # geometry validation (review r10): a mismatched bucket
+        # modulus, band layout, or key kind never ERRORS on its own
+        # — batch band/bucket values simply stop matching stored
+        # ones and true duplicates are silently admitted. Every
+        # append stamps its geometry; disagreeing callers fail loud.
+        rec = None
+        for gk, want in geom_stamp.items():
+            rec_k = recorded_stamp(sig_t, gk)
+            if gk == "n_band_buckets":
+                rec = rec_k
+            if rec_k is not None and rec_k != int(want):
+                raise ValueError(
+                    f"deduping with {gk}={want} against a signature "
+                    f"index built with {gk}={rec_k} at {sig_path} — "
+                    "band/bucket arithmetic would disagree and "
+                    "collisions would be silently missed; pass the "
+                    "index's own geometry"
                 )
-            idx_rows = _bucket_pruned_probe(sig_t, bp, "bb")
-            if idx_rows is not None:
-                drop = drop.unionByName(
-                    dedup_against_band_index(
-                        sigs, idx_rows, **mh_kw
-                    ).select(F.col("new_id").alias("doc"))
+        # layout check from the manifest's recorded newest-dir
+        # schema — one JSON read, not a multi-dir DataFrame built
+        # per unstamped tick just to inspect .columns (ADVICE r10)
+        cols = (
+            sig_t.recorded_columns() or sig_t.read().columns
+            if rec is None
+            else None
+        )
+        if rec is None and "bb" not in cols:
+            raise RuntimeError(
+                f"signature index at {sig_path} uses the pre-r10 "
+                "(doc, sig) layout — the online-dedup sink now "
+                "lands band postings (bb, band, key, doc, sig). "
+                "Rebuild the index from the corpus (one "
+                "minhash_signatures + band_postings pass over "
+                "surviving text, or replay via "
+                "heal_index_from_changes) before resuming the "
+                "stream"
+            )
+        # only the index dirs that may hold the batch's own buckets:
+        # exact, because a colliding pair shares (band, key) and
+        # therefore its bucket; a batch with no buckets probes nothing
+        present = sorted(seen.get["bbs"])
+        if present:
+            others = others.unionByName(
+                sig_t.read(where_in={"bb": present}).selectExpr(
+                    *other_cols, "true AS indexed"
                 )
-        # materialize the dedup DECISION once (optimization r16, guide
-        # §1.2): both staged appends (survivors AND kept_bands) anti-join
-        # against `drop`, and without this the whole decision subplan —
-        # batch self band-join + pruned index band-join + distinct —
-        # re-executed inside EACH staged write. The id list is tiny
-        # (bounded by the batch), content-deterministic, and the
-        # checkpoint additionally gives the planner exact size stats so
-        # the anti-joins broadcast it.
-        drop = drop.distinct().localCheckpoint(eager=True)
-        # re-select after the anti-join: joining on "doc" moves it
-        # first, and the index must keep band_postings' canonical
-        # (bb, band, key, doc, sig) layout so a healer-built index is
-        # bit-identical (review r10 follow-up)
-        kept_bands = bp.join(drop, "doc", "left_anti").select(
-            "bb", "band", "key", "doc", "sig"
+            )
+    # ONE band equi-join decides every drop: a batch doc drops when it
+    # collides above the threshold with an index row or a LOWER-id doc
+    # of its own batch (greedy keep-first; self-pairs fail the id
+    # test). Both sides carry their sig: no re-banding, no sig join
+    # back. The pin's plan stats are its pre-pin ESTIMATE, often far
+    # under its real size, so the join strategy comes from its exact
+    # row count. Deduplicated (a pair repeats once per shared band) and
+    # pinned once (optimization r16): both staged appends anti-join it.
+    mine = bp.select("band", "key", "doc", "sig")
+    if seen.get["n"] * (8 * num_hashes + 64) <= _DECISION_BROADCAST_BYTES:
+        mine = F.broadcast(mine)
+    else:
+        mine = mine.hint("merge")
+    est = F.expr(_jaccard_est_sql("sig", "sig_o", num_hashes))
+    drop = (
+        mine.join(others, ["band", "key"])
+        .where(F.expr("indexed OR dup_of < doc") & (est >= jaccard_threshold))
+        .select("doc")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    # re-select after the anti-join: joining on "doc" moves it
+    # first, and the index must keep band_postings' canonical
+    # (bb, band, key, doc, sig) layout so a healer-built index is
+    # bit-identical (review r10 follow-up)
+    kept_bands = bp.join(drop, "doc", "left_anti").select(
+        "bb", "band", "key", "doc", "sig"
+    )
+    # anti-join, not a semi-join on kept_bands: NULL-text docs
+    # have no signature row yet must survive
+    survivors = batch.join(
+        drop.withColumnRenamed("doc", id_col), id_col, "left_anti"
+    )
+    corpus_t = TxTable(spark, corpus_path)
+    need_c = _tx_replay_check(corpus_t, epoch_id, run_id)
+    need_s = _tx_replay_check(sig_t, epoch_id, run_id)
+    extras = []
+    for x in extra_appends(survivors) if extra_appends else []:
+        xt = x.get("table") or TxTable(spark, x["path"])
+        extras.append((xt, x, _tx_replay_check(xt, epoch_id, run_id)))
+    base_meta = {
+        "epoch": epoch_id,
+        **({"run": run_id} if run_id is not None else {}),
+    }
+    if need_c and need_s and all(nx for _, _, nx in extras):
+        # the normal path: ONE atomic cross-table commit — no crash
+        # window between the corpus, the index, and any derived
+        # table's appends (r14; extras r15)
+        txgroup_commit_appends(
+            group_path,
+            [
+                {"table": corpus_t, "df": survivors, "meta": base_meta},
+                {
+                    "table": sig_t,
+                    "df": kept_bands,
+                    # geometry stamp: later batches/probes validate
+                    # against it
+                    "meta": {**base_meta, **geom_stamp},
+                    "stats_cols": ["bb"],
+                },
+            ]
+            + [
+                {
+                    "table": xt,
+                    "df": x["df"],
+                    "meta": {**base_meta, **(x.get("extra_meta") or {})},
+                    "stats_cols": x.get("stats_cols"),
+                    "bloom_cols": x.get("bloom_cols"),
+                    "partition": x.get("partition"),
+                }
+                for xt, x, _ in extras
+            ],
         )
-        # anti-join, not a semi-join on kept_bands: NULL-text docs
-        # have no signature row yet must survive
-        survivors = batch.join(
-            drop.withColumnRenamed("doc", id_col), id_col, "left_anti"
+        appended_c = appended_s = True
+    else:
+        # replay (nothing needs it) or a LEGACY half-committed
+        # epoch from the pre-r14 ordered-commit sink (some tables
+        # need it): per-table appends, corpus first — the old
+        # heal-on-replay path, kept for migration
+        appended_c = need_c and tx_append_once(
+            survivors, corpus_path, epoch_id, run_id=run_id
         )
-        corpus_t = TxTable(spark, corpus_path)
-        need_c = _tx_replay_check(corpus_t, epoch_id, run_id)
-        need_s = _tx_replay_check(sig_t, epoch_id, run_id)
-        extras = []
-        for x in extra_appends(survivors) if extra_appends else []:
-            xt = x.get("table") or TxTable(spark, x["path"])
-            extras.append((xt, x, _tx_replay_check(xt, epoch_id, run_id)))
-        base_meta = {
-            "epoch": epoch_id,
-            **({"run": run_id} if run_id is not None else {}),
-        }
-        if need_c and need_s and all(nx for _, _, nx in extras):
-            # the normal path: ONE atomic cross-table commit — no crash
-            # window between the corpus, the index, and any derived
-            # table's appends (r14; extras r15)
-            txgroup_commit_appends(
-                group_path,
-                [
-                    {"table": corpus_t, "df": survivors, "meta": base_meta},
-                    {
-                        "table": sig_t,
-                        "df": kept_bands,
-                        # geometry stamp: later batches/probes validate
-                        # against it
-                        "meta": {**base_meta, **geom_stamp},
-                        "stats_cols": ["bb"],
-                    },
-                ]
-                + [
-                    {
-                        "table": xt,
-                        "df": x["df"],
-                        "meta": {**base_meta, **(x.get("extra_meta") or {})},
-                        "stats_cols": x.get("stats_cols"),
-                        "bloom_cols": x.get("bloom_cols"),
-                        "partition": x.get("partition"),
-                    }
-                    for xt, x, _ in extras
-                ],
-            )
-            appended_c = appended_s = True
-        else:
-            # replay (nothing needs it) or a LEGACY half-committed
-            # epoch from the pre-r14 ordered-commit sink (some tables
-            # need it): per-table appends, corpus first — the old
-            # heal-on-replay path, kept for migration
-            appended_c = need_c and tx_append_once(
-                survivors, corpus_path, epoch_id, run_id=run_id
-            )
-            appended_s = need_s and tx_append_once(
-                kept_bands, sig_path, epoch_id, run_id=run_id,
-                stats_cols=["bb"], extra_meta=geom_stamp,
-            )
-            for xt, x, nx in extras:
-                if nx:  # replay check already done above
-                    xt.append(
-                        x["df"],
-                        meta={**base_meta, **(x.get("extra_meta") or {})},
-                        stats_cols=x.get("stats_cols"),
-                        bloom_cols=x.get("bloom_cols"),
-                        partition=x.get("partition"),
-                    )
-        # replay gate: a fully-replayed epoch commits nothing and must
-        # not advance either table with a policy optimize either
-        if appended_c or appended_s:
-            _compact_after_append(
-                corpus_t, auto_compact_max_dirs, corpus_compact_kw
-            )
-            _compact_after_append(
-                sig_t, auto_compact_max_dirs, sig_compact_kw, "bb", n_band_buckets
-            )
-    finally:
-        bp.unpersist()
-        sigs.unpersist()
+        appended_s = need_s and tx_append_once(
+            kept_bands, sig_path, epoch_id, run_id=run_id,
+            stats_cols=["bb"], extra_meta=geom_stamp,
+        )
+        for xt, x, nx in extras:
+            if nx:  # replay check already done above
+                xt.append(
+                    x["df"],
+                    meta={**base_meta, **(x.get("extra_meta") or {})},
+                    stats_cols=x.get("stats_cols"),
+                    bloom_cols=x.get("bloom_cols"),
+                    partition=x.get("partition"),
+                )
+    # replay gate: a fully-replayed epoch commits nothing and must
+    # not advance either table with a policy optimize either
+    if appended_c or appended_s:
+        _compact_after_append(
+            corpus_t, auto_compact_max_dirs, corpus_compact_kw
+        )
+        _compact_after_append(
+            sig_t, auto_compact_max_dirs, sig_compact_kw, "bb", n_band_buckets
+        )
 
 
 def foreach_batch_ingest_semdedup(
@@ -857,7 +861,8 @@ def foreach_batch_ingest_semdedup(
     (``where_in={"bucket": ...}`` — ≤ 2^bits values, exact because
     dedup is a bucket equi-join; VERDICT r9's per-tick O(corpus) scan
     fix), so per-tick read cost tracks the batch's bucket spread, not
-    corpus age. ``compact_kw`` defaults to ``{"cluster_by": "bucket"}``
+    corpus age. The bucket list rides the one eager ``localCheckpoint``
+    that pins the bucketed batch, as an observed ``collect_set``. ``compact_kw`` defaults to ``{"cluster_by": "bucket"}``
     so every policy compaction re-sorts the index into bucket-tight
     dirs and the pruned read keeps skipping; NULL-bucket rows sort
     into the lowest dir and are never read by the (non-NULL) probe.
@@ -900,80 +905,87 @@ def ingest_semdedup_batch(
     the wrapper's docstring for the bucket-pruned index read and the
     clustered compaction default."""
     from hapiy_etl_spark.functions import sign_bucket
+    from hapiy_etl_spark.operators.metrics import observed
     from hapiy_etl_spark.operators.similarity import cosine
 
     spark = batch.sparkSession
-    bucketed = batch.withColumn(
+    # pinned once; the present-bucket list rides the pin as an observed
+    # metric (collect_set skips the NULL buckets)
+    bucketed, seen = observed(
+        batch.withColumn(
+            "bucket",
+            F.when(
+                F.col(vec_col).isNotNull(), sign_bucket(F.col(vec_col), bits)
+            ).otherwise(F.lit(None).cast("int")),
+        ),
+        "semdedup_batch_buckets",
+        F.collect_set("bucket").alias("buckets"),
+    )
+    bucketed = bucketed.localCheckpoint(eager=True)
+    b = bucketed.where(F.col("bucket").isNotNull()).select(
+        F.col(id_col).alias("__nid"),
+        F.col(vec_col).alias("__nv"),
         "bucket",
-        F.when(
-            F.col(vec_col).isNotNull(), sign_bucket(F.col(vec_col), bits)
-        ).otherwise(F.lit(None).cast("int")),
-    ).persist()
-    try:
-        b = bucketed.where(F.col("bucket").isNotNull()).select(
-            F.col(id_col).alias("__nid"),
-            F.col(vec_col).alias("__nv"),
+    )
+    sim_ok = cosine(F.col("__nv"), F.col("__dv")) > threshold
+    # batch-internal greedy keep-first on bucket collisions
+    drop = (
+        b.join(
+            b.select(
+                F.col("__nid").alias("__did"),
+                F.col("__nv").alias("__dv"),
+                "bucket",
+            ),
             "bucket",
         )
-        sim_ok = cosine(F.col("__nv"), F.col("__dv")) > threshold
-        # batch-internal greedy keep-first on bucket collisions
-        drop = (
-            b.join(
-                b.select(
-                    F.col("__nid").alias("__did"),
-                    F.col("__nv").alias("__dv"),
-                    "bucket",
-                ),
+        .where((F.col("__nid") > F.col("__did")) & sim_ok)
+        .select(F.col("__nid").alias("__drop"))
+    )
+    idx = TxTable(spark, index_path)
+    if idx.latest_version() > 0:
+        from hapiy_etl_spark.operators.textindex import recorded_stamp
+
+        rec_bits = recorded_stamp(idx, "bits")
+        if rec_bits is not None and rec_bits != bits:
+            # stored bucket values were computed at the recorded
+            # hyperplane count — a different bits silently stops
+            # bucket collisions from matching (review r10)
+            raise ValueError(
+                f"deduping with bits={bits} against an index whose "
+                f"buckets were computed with bits={rec_bits} at "
+                f"{index_path} — sign buckets would disagree and "
+                "near-duplicates would be silently admitted; pass "
+                "the index's own bits"
+            )
+        # only the index dirs that may hold the batch's own buckets
+        # (exact: dedup is a bucket equi-join); an all-NULL-vector
+        # batch has no buckets and skips the probe
+        present = sorted(seen.get["buckets"])
+        if present:
+            stored = idx.read(where_in={"bucket": present}).select(
+                F.col(id_col).alias("__did"),
+                F.col(vec_col).alias("__dv"),
                 "bucket",
             )
-            .where((F.col("__nid") > F.col("__did")) & sim_ok)
-            .select(F.col("__nid").alias("__drop"))
-        )
-        idx = TxTable(spark, index_path)
-        if idx.latest_version() > 0:
-            from hapiy_etl_spark.operators.textindex import recorded_stamp
-
-            rec_bits = recorded_stamp(idx, "bits")
-            if rec_bits is not None and rec_bits != bits:
-                # stored bucket values were computed at the recorded
-                # hyperplane count — a different bits silently stops
-                # bucket collisions from matching (review r10)
-                raise ValueError(
-                    f"deduping with bits={bits} against an index whose "
-                    f"buckets were computed with bits={rec_bits} at "
-                    f"{index_path} — sign buckets would disagree and "
-                    "near-duplicates would be silently admitted; pass "
-                    "the index's own bits"
-                )
-            # an all-NULL-vector batch has no buckets and skips the probe
-            raw = _bucket_pruned_probe(idx, b, "bucket")
-            if raw is not None:
-                stored = raw.select(
-                    F.col(id_col).alias("__did"),
-                    F.col(vec_col).alias("__dv"),
-                    "bucket",
-                )
-                drop = drop.unionByName(
-                    b.join(stored, "bucket")
-                    .where(sim_ok)
-                    .select(F.col("__nid").alias("__drop"))
-                )
-        survivors = bucketed.join(
-            drop.distinct().withColumnRenamed("__drop", id_col),
-            id_col,
-            "left_anti",
-        )
-        appended = tx_append_once(
-            survivors, index_path, epoch_id, run_id=run_id,
-            stats_cols=["bucket"],
-            extra_meta={"bits": bits},
-        )
-        if appended:
-            _compact_after_append(
-                idx, auto_compact_max_dirs, compact_kw, "bucket", 1 << bits
+            drop = drop.unionByName(
+                b.join(stored, "bucket")
+                .where(sim_ok)
+                .select(F.col("__nid").alias("__drop"))
             )
-    finally:
-        bucketed.unpersist()
+    survivors = bucketed.join(
+        drop.distinct().withColumnRenamed("__drop", id_col),
+        id_col,
+        "left_anti",
+    )
+    appended = tx_append_once(
+        survivors, index_path, epoch_id, run_id=run_id,
+        stats_cols=["bucket"],
+        extra_meta={"bits": bits},
+    )
+    if appended:
+        _compact_after_append(
+            idx, auto_compact_max_dirs, compact_kw, "bucket", 1 << bits
+        )
 
 
 def heal_index_from_changes(

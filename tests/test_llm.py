@@ -2132,3 +2132,71 @@ def test_dhash_batched_bit_identical():
         assert _dhash_from_bytes_batch(frames) == [
             _dhash_from_bytes(f) for f in frames
         ]
+
+
+# Fixed MinHash input: near-duplicate pair, a short doc (< 3 tokens, one
+# partial shingle), a NULL text (no signature), a one-token doc, runs of
+# whitespace, and a long doc.
+_MINHASH_GOLDEN_ROWS = [
+    (1, "the quick brown fox jumps over the lazy dog again and again"),
+    (2, "the quick brown fox jumps over the lazy cat again and again"),
+    (3, "short doc"),
+    (4, None),
+    (5, "one"),
+    (6, "  spaced   out   words   here   now  "),
+    (7, " ".join(f"w{i}" for i in range(50))),
+]
+
+
+def _rows_digest(df) -> str:
+    import hashlib
+
+    rows = sorted(repr(tuple(r)) for r in df.collect())
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
+
+
+@pytest.mark.parametrize(
+    "portable,sig_digest,bp_digest,key_type",
+    [
+        (True, "df173d24a7fca57d", "c031857f6a8904cb", "string"),
+        (False, "69f82263a1411a50", "7ff87e4adc764dee", "bigint"),
+    ],
+)
+def test_minhash_plans_golden_digest(spark, portable, sig_digest, bp_digest, key_type):
+    """minhash_signatures and band_postings are built from SQL text;
+    their rows and types must stay those of the earlier Column-tree
+    form (digests recorded from that form on the same input)."""
+    df = spark.createDataFrame(_MINHASH_GOLDEN_ROWS, "doc_id long, text string")
+    sigs = D.minhash_signatures(df, "doc_id", "text", 3, 16, portable=portable)
+    bp = D.band_postings(sigs, 16, 2, portable, 16)
+    assert sigs.schema.simpleString() == "struct<doc:bigint,sig:array<bigint>>"
+    assert bp.schema.simpleString() == (
+        f"struct<bb:int,band:int,key:{key_type},doc:bigint,sig:array<bigint>>"
+    )
+    assert [f.nullable for f in bp.schema.fields] == [True, False, False, True, False]
+    assert _rows_digest(sigs) == sig_digest
+    assert _rows_digest(bp) == bp_digest
+
+
+@pytest.mark.parametrize("portable", [True, False])
+def test_minhash_plan_build_py4j_budget(spark, portable):
+    """Building the signature and band-postings plans costs at most 800
+    py4j round trips: the hash minima, band keys and band structs are
+    SQL text parsed once by Catalyst, not one round trip per Column
+    node (the Column-tree form took about 2,500)."""
+    df = spark.createDataFrame(_MINHASH_GOLDEN_ROWS, "doc_id long, text string")
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        sigs = D.minhash_signatures(df, "doc_id", "text", 3, 16, portable=portable)
+        D.band_postings(sigs, 16, 2, portable, 16)
+    finally:
+        client.send_command = send
+    assert 0 < calls[0] <= 800, calls[0]

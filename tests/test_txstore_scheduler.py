@@ -2266,6 +2266,137 @@ def test_online_dedup_index_read_prunes_to_batch_buckets(spark, tmp_path):
     assert got == want  # pruning is exact, never lossy
 
 
+@pytest.mark.parametrize("join", ["broadcast", "shuffle"])
+def test_online_dedup_one_join_decision_matches_two_join_composition(
+    spark, tmp_path, monkeypatch, join
+):
+    """ingest_dedup_batch decides its drops in ONE band join of the
+    pinned batch postings against themselves and the bucket-pruned
+    index rows. Its survivors must equal those of the two-join
+    composition it replaced: the batch self-join (keep the lower id of
+    a colliding pair) plus the band-index probe. The batch holds an
+    in-batch chain a~b~c, a near-dup of an index doc, a NULL-text doc,
+    a doc whose id (and text) is already in the index, and a doc whose
+    id is LOWER than the index doc it duplicates. Both join strategies
+    are checked: a small batch broadcasts its postings, one over the
+    size bound shuffles both sides."""
+    from collections import Counter
+
+    from hapiy_etl_spark.operators.dedup import (
+        band_postings,
+        dedup_against_band_index,
+        dedup_against_index,
+        minhash_signatures,
+    )
+    from hapiy_etl_spark.streaming import jobs
+    from hapiy_etl_spark.streaming.jobs import ingest_dedup_batch
+
+    if join == "shuffle":
+        monkeypatch.setattr(jobs, "_DECISION_BROADCAST_BYTES", 0)
+    c, s = str(tmp_path / "corpus"), str(tmp_path / "sigs")
+
+    def words(tag):
+        return [f"{tag}{i}" for i in range(30)]
+
+    def edit(toks, *pos):
+        toks = list(toks)
+        for p in pos:
+            toks[p] = f"x{p}"
+        return " ".join(toks)
+
+    A, B, C = words("a"), words("b"), words("c")
+    ingest_dedup_batch(
+        spark.createDataFrame(
+            [(5, " ".join(A)), (6, " ".join(B))], "doc_id long, text string"
+        ),
+        c, s, epoch_id=1, run_id="r",
+    )
+    batch = spark.createDataFrame(
+        [
+            (10, " ".join(C)),  # chain head
+            (11, edit(C, 7)),  # ~ 10
+            (12, edit(C, 7, 15)),  # ~ 11
+            (13, edit(A, 20)),  # ~ index doc 5
+            (14, None),  # NULL text: no signature, survives
+            (6, " ".join(B)),  # id and text already in the index
+            (2, edit(B, 3)),  # lower id than index doc 6, still a dup
+            (20, " ".join(words("d"))),  # fresh
+        ],
+        "doc_id long, text string",
+    )
+
+    # the two-join composition, against the index as it stands now
+    kw = dict(num_hashes=16, band_size=2, jaccard_threshold=0.5, portable=True)
+    sigs = minhash_signatures(
+        batch.where(F.col("text").isNotNull()), "doc_id", "text", 3, 16, portable=True
+    )
+    present = sorted(
+        r[0] for r in band_postings(sigs, 16, 2, True).select("bb").distinct().collect()
+    )
+    pruned = TxTable(spark, s).read(where_in={"bb": present})
+    dropped = {
+        r[0]
+        for r in dedup_against_index(sigs, sigs, **kw)
+        .where(F.col("new_id") > F.col("dup_of"))
+        .select("new_id")
+        .union(dedup_against_band_index(sigs, pruned, **kw).select("new_id"))
+        .collect()
+    }
+    want = {r[0] for r in batch.select("doc_id").collect()} - dropped
+
+    ingest_dedup_batch(batch, c, s, epoch_id=2, run_id="r")
+    landed = Counter(r.doc_id for r in TxTable(spark, c).read().collect())
+    got = set((landed - Counter({5: 1, 6: 1})).elements())
+    assert got == want
+    assert {10, 14, 20} <= got and not ({11, 13, 6, 2} & got)
+    # the index gains band postings for exactly the signed survivors
+    idx_docs = {
+        r[0] for r in TxTable(spark, s).read().select("doc").distinct().collect()
+    }
+    assert idx_docs == {5, 6} | (got - {14})
+
+
+def test_tx_commits_tick_with_all_null_commit_ts_keeps_watermark(
+    spark, tmp_path
+):
+    """A tick whose commits all lack both wire dates (NULL commit_ts)
+    still lands its rows, and the watermark it takes from the tick's
+    own observed max stays where it was: unset on a fresh pipeline,
+    unchanged after a dated tick."""
+    from hapiy_etl_spark.pipeline.ingest import WIRE_SCHEMA, PipelineConfig
+    from hapiy_etl_spark.pipeline.reference_flow import TxCommitsPipeline
+
+    def wire(sha, date):
+        return (sha, (("a@x", date), ("c@x", date), "m"))
+
+    class FixedSource:
+        """Returns its rows on every fetch, ignoring the watermark."""
+
+        def __init__(self, rows):
+            self.rows = rows
+
+        def fetch(self, spark, since):
+            return spark.createDataFrame(self.rows, WIRE_SCHEMA)
+
+    cfg = PipelineConfig(repo="r1", owner="o", state_dir=str(tmp_path / "state"))
+    pipe = TxCommitsPipeline(cfg, FixedSource([wire("n1", None), wire("n2", None)]), spark)
+    assert pipe.run_once(spark) == 2
+    assert pipe._wm.get("r1") is None
+    assert pipe.state(spark).count() == 2
+
+    pipe.source = FixedSource([wire("d1", "2024-01-01T10:00:00Z")])
+    assert pipe.run_once(spark) == 1
+    wm = pipe._wm.get("r1")
+    assert wm.isoformat() == "2024-01-01T10:00:00"
+
+    pipe.source = FixedSource([wire("n3", None), wire("n4", None)])
+    assert pipe.run_once(spark) == 2
+    assert pipe._wm.get("r1") == wm
+    landed = {r.commit_hash: r.commit_ts for r in pipe.state(spark).collect()}
+    assert set(landed) == {"n1", "n2", "d1", "n3", "n4"}
+    assert landed["n3"] is None and landed["n4"] is None
+
+
 def test_online_semdedup_index_read_prunes_to_batch_buckets(spark, tmp_path):
     """The embedding twin: after the policy's (default) cluster_by=
     'bucket' compaction, the per-tick index read for a narrow batch
