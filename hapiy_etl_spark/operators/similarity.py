@@ -22,35 +22,70 @@ from pyspark.sql import functions as F
 from hapiy_etl_spark.io import spread
 
 
-def dot(a: Column, b: Column) -> Column:
+# The vector helpers below take COLUMN NAMES (str), not Columns, and
+# each builds ONE SQL expression: Catalyst parses it once, where the
+# F.zip_with / F.aggregate lambda trees cost hundreds of py4j round
+# trips per call. Names are backtick-quoted, so "a.b" is the column
+# named "a.b", not a struct field (as in ``lsh_bucket``).
+
+
+def _quote(name: str) -> str:
+    if not isinstance(name, str):
+        raise TypeError(f"expected a column NAME (str), got {type(name).__name__}")
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _double_array_sql(xs) -> str:
+    """An array<double> literal of exactly these values. Each component
+    embeds as CAST('<repr>' AS DOUBLE): repr is the shortest round-trip
+    decimal and Spark's string-to-double cast is correctly rounded, so
+    it is the identical binary64 (also for 'nan', 'inf' and '-inf')."""
+    if xs is None:
+        return "CAST(NULL AS ARRAY<DOUBLE>)"
+    parts = ", ".join(
+        "CAST(NULL AS DOUBLE)" if x is None else f"CAST('{float(x)!r}' AS DOUBLE)"
+        for x in xs
+    )
+    return f"CAST(array({parts}) AS ARRAY<DOUBLE>)"
+
+
+def _fold_sql(a: str, b: str, term: str) -> str:
+    """Left fold Σ term(x, y) over two array expressions, in double."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> {term}), "
+        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+    )
+
+
+def _dot_sql(a: str, b: str) -> str:
+    return _fold_sql(a, b, "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)")
+
+
+def _l2sq_sql(a: str, b: str) -> str:
+    d = "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
+    return _fold_sql(a, b, f"{d} * {d}")
+
+
+def dot(a: str, b: str) -> Column:
     """Σ aᵢbᵢ in double precision (left-fold, deterministic order)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    return F.expr(_dot_sql(_quote(a), _quote(b)))
+
+
+def l2_norm(a: str) -> Column:
+    qa = _quote(a)
+    return F.expr(f"sqrt({_dot_sql(qa, qa)})")
+
+
+def cosine(a: str, b: str) -> Column:
+    qa, qb = _quote(a), _quote(b)
+    return F.expr(
+        f"{_dot_sql(qa, qb)} / (sqrt({_dot_sql(qa, qa)}) * sqrt({_dot_sql(qb, qb)}))"
     )
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def l2sq(a: Column, b: Column) -> Column:
+def l2sq(a: str, b: str) -> Column:
     """Σ (aᵢ-bᵢ)² in double precision (left-fold, deterministic)."""
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return F.expr(_l2sq_sql(_quote(a), _quote(b)))
 
 
 def cosine_topk(
@@ -70,22 +105,18 @@ def cosine_topk(
     Output: (query_id, corpus_id, rank, cosine_sim).
     """
     q = queries.select(
-        F.col(query_id).alias("__qid"),
-        F.col(query_vec).alias("__qv"),
-        l2_norm(F.col(query_vec)).alias("__qn"),
-    )
+        F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qv")
+    ).select("__qid", "__qv", l2_norm("__qv").alias("__qn"))
     c = corpus.select(
-        F.col(corpus_id).alias("__cid"),
-        F.col(corpus_vec).alias("__cv"),
-        l2_norm(F.col(corpus_vec)).alias("__cn"),
-    )
+        F.col(corpus_id).alias("__cid"), F.col(corpus_vec).alias("__cv")
+    ).select("__cid", "__cv", l2_norm("__cv").alias("__cn"))
     sim = (
         F.broadcast(q)
         .join(c, F.col("__qid") != F.col("__cid"))
         .select(
             "__qid",
             "__cid",
-            (dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn"))).alias("__sim"),
+            (dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn"))).alias("__sim"),
         )
     )
     w = W.partitionBy("__qid").orderBy(F.col("__sim").desc(), F.col("__cid"))
@@ -215,20 +246,10 @@ def lsh_bucket(vec: str, planes: list[list[float]]) -> Column:
     decimal and Double.parseDouble is correctly rounded, so every
     plane component is the identical binary64 the old F.lit carried;
     the fold is the same left-to-right aggregate as :func:`dot`."""
-
-    quoted = "`" + vec.replace("`", "``") + "`"
-
-    def dot_sql(p: list[float]) -> str:
-        arr = ", ".join(f"CAST('{x!r}' AS DOUBLE)" for x in p)
-        return (
-            f"aggregate(zip_with({quoted}, array({arr}), "
-            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-
+    quoted = _quote(vec)
     bits = " | ".join(
-        f"(CASE WHEN {dot_sql(p)} > 0 THEN shiftleft(CAST(1 AS BIGINT), {i}) "
-        "ELSE CAST(0 AS BIGINT) END)"
+        f"(CASE WHEN {_dot_sql(quoted, _double_array_sql(p))} > 0 "
+        f"THEN shiftleft(CAST(1 AS BIGINT), {i}) ELSE CAST(0 AS BIGINT) END)"
         for i, p in enumerate(planes)
     )
     return F.expr(bits)
@@ -304,7 +325,7 @@ def lsh_topk(
         # a pair can collide in several tables/probes — dedupe BEFORE the
         # cosine refine so each candidate is scored once
         .dropDuplicates(["__qid", "__cid"])
-        .select("__qid", "__cid", cosine(F.col("__qv"), F.col("__cv")).alias("__sim"))
+        .select("__qid", "__cid", cosine("__qv", "__cv").alias("__sim"))
     )
     w = W.partitionBy("__qid").orderBy(F.col("__sim").desc(), F.col("__cid"))
     return (
@@ -388,7 +409,7 @@ def ivf_index_assign(
         b.crossJoin(F.broadcast(centroids))
         .select(
             "__cid", "__cv", "cell",
-            l2sq(F.col("__cv"), F.col("centroid")).alias("__d"),
+            l2sq("__cv", "centroid").alias("__d"),
         )
     )
     w = W.partitionBy("__cid").orderBy(F.col("__d").asc(), F.col("cell"))
@@ -409,30 +430,50 @@ def ivf_probe_index(
     n_probe: int = 2,
     vec: str = "embedding",
 ) -> DataFrame:
-    """Probe a PERSISTED IVF index: rank the broadcast centroid table
-    per query, keep n_probe cells, then read ONLY those cells' stored
-    rows and score them. ``assigned`` is either the assignment
-    DataFrame (filtered with isin — parquet row-group stats skip) or a
-    callable ``cells -> DataFrame`` so a TxTable reader can turn the
-    probed-cell list into dir-level pruning
-    (``lambda cells: t.read(where_in={"cell": cells})``). The
-    probed-cell collect is bounded by n_centroids rows regardless of
-    query-set size.
+    """Probe a PERSISTED IVF index: keep each query's n_probe nearest
+    cells, then read ONLY those cells' stored rows and score them.
+    ``assigned`` is either the assignment DataFrame (filtered with isin —
+    parquet row-group stats skip) or a callable ``cells -> DataFrame``
+    so a TxTable reader can turn the probed-cell list into dir-level
+    pruning (``lambda cells: t.read(where_in={"cell": cells})``).
+
+    The centroid table (n_centroids tiny rows) is collected once and
+    inlined into one narrow projection as double literals, so ranking a
+    query's cells needs no join, window or broadcast. The query x
+    probed-cell rows are pinned with one eager ``localCheckpoint``; the
+    probed-cell list rides that pin as an observed ``collect_set``, and
+    the scoring join reads the pin, so the query frame is read once.
 
     Probe cells rank by SQUARED L2 to the centroid — the SAME metric
     the quantizer and ``ivf_index_assign`` place vectors with (ADVICE
     r9: a cosine-ranked probe on non-normalized embeddings could probe
     cells the assignment rule never chose, silently hurting recall;
-    the exact regime masks it because probe-all reads every cell)."""
-    q = queries.select(F.col(query_id).alias("__qid"), F.col(vec).alias("__qv"))
-    qc = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(centroids))
-        .select("__qid", "__qv", "cell", l2sq(F.col("__qv"), F.col("centroid")).alias("__cd"))
+    the exact regime masks it because probe-all reads every cell).
+    Ties break on the lower cell id."""
+    from hapiy_etl_spark.operators.metrics import observed
+
+    cents = centroids.select("cell", "centroid").collect()
+    if not cents:
+        raise ValueError("empty centroid table — nothing to probe")
+    cell_type = centroids.schema["cell"].dataType.simpleString()
+    ranked = ", ".join(
+        f"named_struct('d', {_l2sq_sql('__qv', _double_array_sql(c))}, "
+        f"'cell', CAST({int(cell)} AS {cell_type}))"
+        for cell, c in cents
     )
-    wq = W.partitionBy("__qid").orderBy(F.col("__cd").asc(), F.col("cell"))
-    probes = qc.withColumn("__pr", F.row_number().over(wq)).where(F.col("__pr") <= n_probe)
-    cells = sorted(r[0] for r in probes.select("cell").distinct().collect())
+    q = queries.select(F.col(query_id).alias("__qid"), F.col(vec).alias("__qv"))
+    probes, seen = observed(
+        q.selectExpr(
+            "__qid",
+            "__qv",
+            f"explode(transform(slice(array_sort(array({ranked})), 1, {int(n_probe)}), "
+            "p -> p.cell)) AS __cell",
+        ),
+        "ivf_probe_cells",
+        F.collect_set("__cell").alias("cells"),
+    )
+    probes = probes.localCheckpoint(eager=True)
+    cells = sorted(seen.get["cells"])
     stored = assigned(cells) if callable(assigned) else assigned.where(
         F.col("cell").isin(cells)
     )
@@ -442,10 +483,10 @@ def ivf_probe_index(
         F.col(vec).alias("__cv"),
     )
     sim = (
-        F.broadcast(probes.select("__qid", "__qv", F.col("cell").alias("__cell")))
+        F.broadcast(probes)
         .join(stored, on="__cell")
         .where(F.col("__qid") != F.col("__cid"))
-        .select("__qid", "__cid", cosine(F.col("__qv"), F.col("__cv")).alias("__sim"))
+        .select("__qid", "__cid", cosine("__qv", "__cv").alias("__sim"))
     )
     w = W.partitionBy("__qid").orderBy(F.col("__sim").desc(), F.col("__cid"))
     return (
@@ -734,7 +775,7 @@ def _exact_cosine_rerank(
         F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qv")
     )
     scored = fetched.join(F.broadcast(q), "__qid").select(
-        "__qid", "__cid", cosine(F.col("__qv"), F.col("__cv")).alias("__score")
+        "__qid", "__cid", cosine("__qv", "__cv").alias("__score")
     )
     return _refine_topk(scored, query_id, k, "cosine_sim", descending=True)
 

@@ -19,9 +19,10 @@ turn a literal query-term list into a dir list with no Spark job), and
 a DuckDB oracle twin.
 
 Scale shape at 100 TB: postings are narrow (term, id, two ints) — a
-fraction of corpus bytes; the probe's side tables (per-term df, 1-row
-corpus stats) are broadcast-tiny; scoring is one hash join + one
-groupBy on the pruned slice. No all-pairs, no corpus rescan per query.
+fraction of corpus bytes; per-term df is a window over the pruned slice
+and the corpus stats (one meta row per append) are summed on the
+driver; scoring is one window + one groupBy on the pruned slice. No
+all-pairs, no corpus rescan per query.
 
 Reference parity: the reference pipeline (git_etl.ts) has no search
 surface; this is target-surface for the LLM-data-pipeline family
@@ -271,11 +272,13 @@ def bm25_probe_index(
     the bucket list into dir-level pruning) or a postings DataFrame
     (filtered with isin — parquet row-group stats skip). The probed
     buckets come from the driver-side md5 twin: no Spark job, no
-    collect. Per-term document frequency is computed from the probed
-    slice itself — a bucket holds EVERY posting of its terms, so the
-    slice-local count IS the corpus df — and corpus stats come from
-    summing the (tiny) meta table. Scores therefore match a full-corpus
-    BM25 exactly, at bucket-read cost.
+    collect. Per-term document frequency is ``count(*) OVER (PARTITION
+    BY term)`` over the probed slice itself — a bucket holds EVERY
+    posting of its terms, so the slice-local count IS the corpus df.
+    Corpus stats are the sums of the (tiny, one row per append) meta
+    table, taken on the driver from one ``collect()`` and inlined as
+    literals. Scores therefore match a full-corpus BM25 exactly, at
+    bucket-read cost, and the score is one SQL expression.
 
     Pass ``index=`` (the postings TxTable) to validate ``n_buckets``
     against the bucket count stamped at append time — a probe with the
@@ -291,25 +294,45 @@ def bm25_probe_index(
         F.col("tb").isin(buckets)
     )
     p = p.where(F.col("term").isin(term_list))
-    stats = (
-        meta.agg(F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl"))
-        .select("n_docs", (F.col("sum_dl") / F.col("n_docs")).alias("avg_dl"))
-    )
-    df_t = p.groupBy("term").agg(F.count("*").alias("nd"))
-    idf = F.log(
-        (F.col("n_docs") - F.col("nd") + 0.5) / (F.col("nd") + 0.5) + 1
-    )
-    norm = F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avg_dl"))
-    contrib = idf * F.col("tf") * (k1 + 1) / norm
+    rows = meta.select("n_docs", "sum_dl").collect()
+    n_docs = _sql_sum([r[0] for r in rows])
+    sum_dl = _sql_sum([r[1] for r in rows])
+
+    # idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avg_dl)) with
+    # idf = ln((n_docs - nd + 0.5) / (nd + 0.5) + 1); the parentheses pin
+    # the floating-point evaluation order, so scores are reproducible
+    # bit for bit (1 - b and k1 + 1 are folded in Python)
+    lit = _double_sql
+    idf = f"ln(((({n_docs} - nd) + {lit(0.5)}) / (nd + {lit(0.5)})) + 1)"
+    avg_dl = f"({sum_dl} / {n_docs})"
+    norm = f"(tf + ((((dl * {lit(b)}) / {avg_dl}) + {lit(1 - b)}) * {lit(k1)}))"
+    contrib = f"((({idf} * tf) * {lit(k1 + 1)}) / {norm})"
     return (
-        p.join(F.broadcast(df_t), "term")
-        .crossJoin(F.broadcast(stats))
+        p.withColumn("nd", F.expr("count(*) OVER (PARTITION BY term)"))
         .groupBy(doc_id)
-        .agg(F.sum(contrib).alias("score"), F.count("*").alias("n_terms_hit"))
+        .agg(F.expr(f"sum({contrib})").alias("score"), F.count("*").alias("n_terms_hit"))
         .select(doc_id, "n_terms_hit", F.round("score", 4).alias("bm25"))
         .orderBy(F.col("bm25").desc(), doc_id)
         .limit(k)
     )
+
+
+def _sql_sum(vals: list) -> str:
+    """SQL literal of SUM(vals) with SUM's NULL rule (NULLs skipped,
+    all-NULL or no rows gives NULL), for the integral or floating
+    columns of a meta table."""
+    vals = [v for v in vals if v is not None]
+    if not vals:
+        return "CAST(NULL AS BIGINT)"
+    if all(isinstance(v, int) for v in vals):
+        return f"CAST({sum(vals)} AS BIGINT)"
+    return _double_sql(sum(vals))
+
+
+def _double_sql(x: float) -> str:
+    """The exact double ``x`` as SQL: repr is the shortest round-trip
+    decimal and Spark's string-to-double cast is correctly rounded."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
 
 
 def shingle_postings_build(
@@ -367,31 +390,32 @@ def decontam_probe_index(
 
     ``bench`` is a DataFrame with one distinct benchmark shingle per
     row in column ``s`` (typically shingles of the eval suite —
-    broadcast-tiny next to a training corpus). The probed-bucket list
-    comes from one tiny agg over bench (≤ n_buckets rows collected); a
-    realistic benchmark covers every bucket — the index's win here is
-    skipping the corpus rescan/re-shingle, and dir pruning is the
-    BM25/keyword probes' win — but a narrow bench (single leaked
-    document, one contaminated shard) does prune. ``reader`` as in
+    broadcast-tiny next to a training corpus). Its distinct shingles
+    are pinned once with an eager ``localCheckpoint``, and the
+    probed-bucket list (≤ n_buckets values) rides that pin as an
+    observed ``collect_set``, so bench is evaluated once; a realistic
+    benchmark covers every bucket — the index's win here is skipping
+    the corpus rescan/re-shingle, and dir pruning is the BM25/keyword
+    probes' win — but a narrow bench (single leaked document, one
+    contaminated shard) does prune. ``reader`` as in
     ``bm25_probe_index``. n_sh rides on each posting, so the ratio's
     denominator is exact even though only bench-matching rows
     survive the join. ``index=`` validates ``n_buckets`` against the
     count stamped at append time, as in ``bm25_probe_index``."""
+    from hapiy_etl_spark.operators.metrics import observed
+
     if index is not None:
         _check_n_buckets(index, n_buckets, "probing")
-    bench = (
+    bench, seen = observed(
         bench.where(F.col("s").isNotNull())
         .select(F.col("s").alias("shingle"))
         .distinct()
+        .withColumn("tb", term_bucket(F.col("shingle"), n_buckets)),
+        "decontam_bench_buckets",
+        F.collect_set("tb").alias("buckets"),
     )
-    buckets = sorted(
-        r[0]
-        for r in bench.select(
-            term_bucket(F.col("shingle"), n_buckets).alias("tb")
-        )
-        .distinct()
-        .collect()
-    )
+    bench = bench.localCheckpoint(eager=True)
+    buckets = sorted(seen.get["buckets"])
     if not buckets:
         raise ValueError(
             "bench shingle set is empty (or all-NULL) — nothing to "
@@ -401,7 +425,7 @@ def decontam_probe_index(
         F.col("tb").isin(buckets)
     )
     return (
-        p.join(F.broadcast(bench), "shingle")
+        p.join(F.broadcast(bench.select("shingle")), "shingle")
         .groupBy(doc_id)
         .agg(F.count("*").alias("n_hits"), F.first("n_sh").alias("n_sh"))
         .select(

@@ -416,7 +416,14 @@ class TxTable:
         names and Spark would otherwise re-infer their type (a string
         repo '012' silently becomes integer 12) — the stored schema pins
         the written types, and the trailing select pins column order so
-        the snapshot schema is stable across layouts."""
+        the snapshot schema is stable across layouts.
+
+        The flat group is read with its recorded schema too when every
+        flat dir records the same one and ``merge_schema`` is off: that
+        is the schema parquet inference would find (Spark reads every
+        file-source column as nullable either way), and it saves the
+        1-task footer-reading job inference submits at plan time.
+        Missing or differing recorded schemas keep inference."""
         from pyspark.sql.types import StructType
 
         layouts = m.get("layouts") or {}
@@ -426,8 +433,13 @@ class TxTable:
         frames = []
         if flat:
             reader = self.spark.read
+            flat_schemas = [schemas.get(d) for d in flat]
             if merge_schema:
                 reader = reader.option("mergeSchema", "true")
+            elif flat_schemas[0] is not None and all(
+                sch == flat_schemas[0] for sch in flat_schemas
+            ):
+                reader = reader.schema(StructType.fromJson(flat_schemas[0]))
             frames.append(
                 reader.parquet(*[str(self.path / "data" / d) for d in flat])
             )

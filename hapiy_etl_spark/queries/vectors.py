@@ -587,7 +587,7 @@ def contrastive_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "__qid",
             "__cid",
             F.col("__csrc").alias("negative_source"),
-            S.cosine(F.col("__qv"), F.col("__cv")).alias("__sim"),
+            S.cosine("__qv", "__cv").alias("__sim"),
         )
     )
     w = Window.partitionBy("__qid").orderBy(F.col("__sim").desc(), F.col("__cid"))
@@ -1033,7 +1033,7 @@ def embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = bucketed.select(
         F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"), "bucket"
     )
-    sim = S.cosine(F.col("ea"), F.col("eb"))
+    sim = S.cosine("ea", "eb")
     return (
         a.join(b, ["bucket"])
         .where(F.col("id_a") < F.col("id_b"))
@@ -1104,7 +1104,7 @@ def semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = batch.select(
         F.col("vec_id").alias("new_id"), F.col("embedding").alias("eb"), "bucket"
     )
-    sim = S.cosine(F.col("ea"), F.col("eb"))
+    sim = S.cosine("ea", "eb")
     out = (
         b.join(a, ["bucket"])
         .withColumn("__sim", sim)
@@ -1314,7 +1314,7 @@ def class_balanced_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("embeddings",))
-    norm = S.l2_norm(F.col("embedding"))
+    norm = S.l2_norm("embedding")
     return (
         t["embeddings"]
         .groupBy("label")
@@ -1382,7 +1382,7 @@ def semdedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
     )
-    sim = S.cosine(F.col("embedding"), F.col("cvec"))
+    sim = S.cosine("embedding", "cvec")
     w_best = W.partitionBy("vec_id").orderBy(F.col("sim").desc(), "cid")
     best = (
         emb.select("vec_id", "embedding")
@@ -1401,7 +1401,7 @@ def semdedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cluster_id",
             F.round("sim", 6).alias("centroid_sim"),
             F.coalesce(
-                S.cosine(F.col("embedding"), F.col("prev")) > 0.92, F.lit(False)
+                S.cosine("embedding", "prev") > 0.92, F.lit(False)
             ).alias("is_neardup"),
         )
         .orderBy("vec_id")

@@ -927,7 +927,7 @@ def ingest_semdedup_batch(
         F.col(vec_col).alias("__nv"),
         "bucket",
     )
-    sim_ok = cosine(F.col("__nv"), F.col("__dv")) > threshold
+    sim_ok = cosine("__nv", "__dv") > threshold
     # batch-internal greedy keep-first on bucket collisions
     drop = (
         b.join(

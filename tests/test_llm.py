@@ -2179,24 +2179,312 @@ def test_minhash_plans_golden_digest(spark, portable, sig_digest, bp_digest, key
 
 
 @pytest.mark.parametrize("portable", [True, False])
-def test_minhash_plan_build_py4j_budget(spark, portable):
+def test_minhash_plan_build_py4j_budget(spark, py4j_round_trips, portable):
     """Building the signature and band-postings plans costs at most 800
     py4j round trips: the hash minima, band keys and band structs are
     SQL text parsed once by Catalyst, not one round trip per Column
     node (the Column-tree form took about 2,500)."""
     df = spark.createDataFrame(_MINHASH_GOLDEN_ROWS, "doc_id long, text string")
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    calls = [0]
 
-    def counting(*args, **kwargs):
-        calls[0] += 1
-        return send(*args, **kwargs)
-
-    client.send_command = counting
-    try:
+    def build():
         sigs = D.minhash_signatures(df, "doc_id", "text", 3, 16, portable=portable)
         D.band_postings(sigs, 16, 2, portable, 16)
-    finally:
-        client.send_command = send
-    assert 0 < calls[0] <= 800, calls[0]
+
+    _, calls = py4j_round_trips(build)
+    assert 0 < calls <= 800, calls
+
+
+# -- search-probe equivalence: golden rows recorded from the earlier
+# -- plan shapes (cross-join + window cell ranking, groupBy + broadcast
+# -- BM25 statistics, distinct-collect decontamination bucket list)
+
+_IVF_CENTROIDS = [
+    (0, [1e-05, 0.5, -0.5, 0.25]),  # prints in exponent form
+    (1, [-0.5, 0.5, 0.5, -0.25]),
+    (2, [0.5, -0.5, 0.5, 0.5]),
+    (3, [-0.5, -0.5, -0.5, 0.0]),
+]
+
+
+def _ivf_golden_cases(spark, root) -> dict:
+    """Probe outputs for hand-built IVF indexes: 24 corpus vectors over
+    4 cells, and 6 queries — two share ids with corpus rows (their
+    self-match is excluded), one equals centroid 2 exactly."""
+    from hapiy_etl_spark.operators.txstore import TxTable
+
+    vecs = S._hyperplanes(4, 30, seed=7)
+    assigned = spark.createDataFrame(
+        [(i % 4, i, vecs[i]) for i in range(24)],
+        "cell int, vec_id long, embedding array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(100, vecs[24]), (101, vecs[25]), (102, vecs[26]), (3, vecs[27]),
+         (7, vecs[28]), (104, list(_IVF_CENTROIDS[2][1]))],
+        "vec_id long, embedding array<double>",
+    )
+    schema = "cell int, centroid array<double>"
+    cent = spark.createDataFrame(_IVF_CENTROIDS, schema)
+    nonfinite = spark.createDataFrame(
+        [(0, _IVF_CENTROIDS[0][1]), (1, [float("inf"), 0.5, 0.5, -0.25]),
+         (2, _IVF_CENTROIDS[2][1]), (3, [float("nan"), -0.5, -0.5, 0.0])],
+        schema,
+    )
+    idx = TxTable(spark, str(root / "ivf_golden"))
+    for m in range(2):
+        idx.append(assigned.where(F.col("vec_id") % 2 == m), stats_cols=["cell"])
+    seen = []
+
+    def reader(cells):
+        seen.append(list(cells))
+        return idx.read(where_in={"cell": cells})
+
+    def probe(c, a, n_probe, q=queries):
+        return sorted(
+            map(tuple, S.ivf_probe_index(
+                q, c, a, "vec_id", "vec_id", k=3, n_probe=n_probe
+            ).collect())
+        )
+
+    out = {
+        "dataframe": probe(cent, assigned, 2),
+        "reader": probe(cent, reader, 2),
+        "reader_one_query": probe(cent, reader, 2, queries.where("vec_id = 104")),
+        "probe_all": probe(cent, assigned, 4),
+        "nonfinite": probe(nonfinite, assigned, 2),
+    }
+    out["reader_cells"] = seen
+    return out
+
+
+def _bm25_golden_cases(spark, root) -> dict:
+    """BM25 and decontamination outputs over a postings index and a
+    shingle index grown by three appends (three meta rows)."""
+    from hapiy_etl_spark.operators import textindex as TI
+    from hapiy_etl_spark.operators.txstore import TxTable
+
+    vocab = [f"w{i}" for i in range(30)]
+    docs = spark.createDataFrame(
+        [(i, " ".join(vocab[(i * 7 + j * j) % 20] for j in range(4 + i % 7)))
+         for i in range(24)],
+        "doc_id long, text string",
+    )
+    idx = TxTable(spark, str(root / "bm25_postings"))
+    meta_t = TxTable(spark, str(root / "bm25_meta"))
+    sh_idx = TxTable(spark, str(root / "shingles"))
+    for m in range(3):
+        batch = docs.where(F.col("doc_id") % 3 == m)
+        TI.postings_append(idx, meta_t, *TI.postings_build(batch))
+        TI.postings_append(sh_idx, None, TI.shingle_postings_build(batch), None)
+    # two query terms that share a bucket, one more, one absent term
+    by_bucket: dict = {}
+    for w in vocab:
+        by_bucket.setdefault(TI.term_bucket_py(w), []).append(w)
+    pair = next(ws[:2] for ws in by_bucket.values() if len(ws) >= 2)
+    other = next(w for w in vocab if TI.term_bucket_py(w) != TI.term_bucket_py(pair[0]))
+    terms = [*pair, other, "absent-term"]
+
+    def reader(bs):
+        return idx.read(where_in={"tb": bs})
+
+    def bm25(r, ts, k):
+        return [tuple(x) for x in TI.bm25_probe_index(
+            r, meta_t.read(), ts, k=k, index=idx
+        ).collect()]
+
+    bench = docs.where(F.col("doc_id").isin(2, 21)).select(
+        F.explode(D.shingles("text", 3)).alias("s")
+    ).union(spark.createDataFrame([("not in any doc",), (None,)], "s string"))
+    return {
+        "terms": terms,
+        "reader": bm25(reader, terms, 5),
+        "dataframe": bm25(idx.read(), terms, 5),
+        "k_over_hits": bm25(reader, terms, 100),
+        "absent_only": bm25(reader, ["absent-term"], 5),
+        "decontam": [tuple(x) for x in TI.decontam_probe_index(
+            lambda bs: sh_idx.read(where_in={"tb": bs}), bench, threshold=0.05, index=sh_idx
+        ).collect()],
+    }
+
+
+# recorded from the earlier plan shapes on the inputs above
+_IVF_GOLDEN = {
+    "dataframe": [
+        (3, 0, 1, 0.979403), (3, 8, 2, 0.838061), (3, 21, 3, 0.398086),
+        (7, 15, 3, 0.355838), (7, 19, 2, 0.556485), (7, 22, 1, 0.561158),
+        (100, 3, 3, 0.400662), (100, 7, 2, 0.423615), (100, 20, 1, 0.583697),
+        (101, 0, 3, 0.380926), (101, 16, 1, 0.588606), (101, 17, 2, 0.488941),
+        (102, 3, 2, 0.730962), (102, 7, 1, 0.788103), (102, 19, 3, 0.56784),
+        (104, 11, 2, 0.604837), (104, 15, 3, 0.499208), (104, 22, 1, 0.809273),
+    ],
+    "reader": [
+        (3, 0, 1, 0.979403), (3, 8, 2, 0.838061), (3, 21, 3, 0.398086),
+        (7, 15, 3, 0.355838), (7, 19, 2, 0.556485), (7, 22, 1, 0.561158),
+        (100, 3, 3, 0.400662), (100, 7, 2, 0.423615), (100, 20, 1, 0.583697),
+        (101, 0, 3, 0.380926), (101, 16, 1, 0.588606), (101, 17, 2, 0.488941),
+        (102, 3, 2, 0.730962), (102, 7, 1, 0.788103), (102, 19, 3, 0.56784),
+        (104, 11, 2, 0.604837), (104, 15, 3, 0.499208), (104, 22, 1, 0.809273),
+    ],
+    "reader_one_query": [
+        (104, 11, 2, 0.604837), (104, 15, 3, 0.499208), (104, 22, 1, 0.809273),
+    ],
+    "probe_all": [
+        (3, 0, 1, 0.979403), (3, 8, 2, 0.838061), (3, 23, 3, 0.65484),
+        (7, 9, 3, 0.797487), (7, 12, 1, 0.884845), (7, 13, 2, 0.812661),
+        (100, 1, 2, 0.839077), (100, 9, 1, 0.880953), (100, 17, 3, 0.71156),
+        (101, 3, 3, 0.822493), (101, 7, 1, 0.849921), (101, 18, 2, 0.832126),
+        (102, 3, 3, 0.730962), (102, 7, 2, 0.788103), (102, 18, 1, 0.884993),
+        (104, 11, 2, 0.604837), (104, 21, 3, 0.553726), (104, 22, 1, 0.809273),
+    ],
+    "nonfinite": [
+        (3, 0, 1, 0.979403), (3, 8, 2, 0.838061), (3, 14, 3, 0.137994),
+        (7, 4, 3, 0.520712), (7, 12, 1, 0.884845), (7, 22, 2, 0.561158),
+        (100, 10, 2, 0.510274), (100, 18, 3, 0.457393), (100, 20, 1, 0.583697),
+        (101, 0, 3, 0.380926), (101, 16, 2, 0.588606), (101, 18, 1, 0.832126),
+        (102, 6, 2, 0.563395), (102, 16, 3, 0.273494), (102, 18, 1, 0.884993),
+        (104, 4, 2, 0.478382), (104, 20, 3, 0.344161), (104, 22, 1, 0.809273),
+    ],
+    "reader_cells": [[0, 1, 2, 3], [2, 3]],
+}
+
+_BM25_GOLDEN = {
+    "terms": ["w0", "w1", "w2", "absent-term"],
+    "reader": [
+        (0, 2, 2.8895), (23, 2, 2.5226), (20, 2, 2.4639), (3, 2, 2.372),
+        (11, 2, 2.2384),
+    ],
+    "dataframe": [
+        (0, 2, 2.8895), (23, 2, 2.5226), (20, 2, 2.4639), (3, 2, 2.372),
+        (11, 2, 2.2384),
+    ],
+    "k_over_hits": [
+        (0, 2, 2.8895), (23, 2, 2.5226), (20, 2, 2.4639), (3, 2, 2.372),
+        (11, 2, 2.2384), (18, 1, 1.5735), (12, 1, 1.5136), (19, 1, 1.5136),
+        (13, 1, 1.458), (14, 1, 1.4448), (8, 1, 1.3468), (15, 1, 1.3468),
+        (16, 1, 1.2613), (17, 1, 1.186), (5, 1, 1.0595), (6, 1, 1.0059),
+    ],
+    "absent_only": [],
+    "decontam": [
+        (2, 4, 1.0), (21, 2, 1.0), (22, 3, 1.0), (1, 2, 0.666667),
+    ],
+}
+
+
+def test_ivf_probe_matches_golden_rows(spark, tmp_path):
+    """ivf_probe_index ranks cells from inlined centroid literals and
+    pins the query x cell rows once; every case returns the rows the
+    cross-join + window form returned: a query equal to a centroid,
+    self-excluded query ids, both ``assigned`` forms, probe-all, an
+    exponent-form component, and NaN / inf components (a NaN distance
+    ranks last, as in the window sort). The reader gets the same
+    sorted cell lists."""
+    assert _ivf_golden_cases(spark, tmp_path) == _IVF_GOLDEN
+
+
+def test_bm25_and_decontam_probes_match_golden_rows(spark, tmp_path):
+    """bm25_probe_index sums the meta rows on the driver and takes df
+    from a window; decontam_probe_index pins its bench once. Both
+    return the rows of the earlier plans: an absent query term, two
+    terms in one bucket, three meta rows, a DataFrame reader, k above
+    the hit count, and a bench with a NULL and an unseen shingle."""
+    assert _bm25_golden_cases(spark, tmp_path) == _BM25_GOLDEN
+
+
+def test_search_probes_spark_job_budget(spark, spark_jobs, tmp_path):
+    """A BM25 top-10 runs at most 4 Spark jobs and an IVF top-10 at most
+    5, on the benchmark's layout (one flat index dir per TxTable, a
+    cached meta table and centroid table, an RDD-backed query frame).
+    The cross-join + window and groupBy + broadcast forms ran 10 and 7;
+    both also paid a parquet schema-inference job per index read."""
+    from hapiy_etl_spark.operators import textindex as TI
+    from hapiy_etl_spark.operators.txstore import TxTable
+
+    vocab = [f"w{i}" for i in range(30)]
+    docs = spark.createDataFrame(
+        [(i, " ".join(vocab[(i * 7 + j * j) % 30] for j in range(12))) for i in range(200)],
+        "doc_id long, text string",
+    )
+    idx = TxTable(spark, str(tmp_path / "postings"))
+    meta_t = TxTable(spark, str(tmp_path / "meta"))
+    TI.postings_append(idx, meta_t, *TI.postings_build(docs), split_buckets=False)
+    meta = meta_t.read().cache()
+    meta.count()
+
+    vecs = S._hyperplanes(8, 201, seed=11)
+    emb = spark.createDataFrame(
+        [(i, vecs[i]) for i in range(200)], "vec_id long, embedding array<double>"
+    )
+    cent, assigned = S.ivf_index_build(emb, "vec_id", n_centroids=4, max_iter=2)
+    ivf = TxTable(spark, str(tmp_path / "ivf"))
+    ivf.append(assigned, stats_cols=["cell"])
+    cent = cent.cache()
+    cent.count()
+
+    def bm25():
+        return TI.bm25_probe_index(
+            lambda bs: idx.read(where_in={"tb": bs}), meta, ["w1", "w4", "w9"],
+            k=10, index=idx,
+        ).collect()
+
+    def ivf_probe():
+        q = spark.createDataFrame([(-1, vecs[200])], "qid long, embedding array<double>")
+        return S.ivf_probe_index(
+            q, cent, lambda cells: ivf.read(where_in={"cell": cells}), "qid", "vec_id",
+            k=10, n_probe=2,
+        ).collect()
+
+    for probe, budget in ((bm25, 4), (ivf_probe, 5)):
+        probe()  # warm
+        rows, jobs = spark_jobs(probe)
+        assert len(rows) == 10
+        assert jobs <= budget, (probe.__name__, jobs)
+
+
+def _column_dot(a, b):
+    """The Column-API fold the SQL-text helpers replaced."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def test_vector_helpers_sql_text_match_column_fold(spark):
+    """dot / l2_norm / cosine / l2sq take column NAMES (backtick-quoted,
+    so a name with a space or a dot is one column) and return exactly
+    the values of the Column-API fold, NULLs and ragged arrays
+    included; a Column argument is a TypeError."""
+    df = spark.createDataFrame(
+        [
+            (1, [1.0, 2.0, 3.0], [0.5, -1.0, 2.0]),
+            (2, [1e-05, 0.1, 0.2], [3.0, 0.7, 1e300]),
+            (3, [1.0, 2.0], [1.0, 2.0, 3.0]),
+            (4, None, [1.0]),
+        ],
+        "id int, `my vec` array<double>, `b.c` array<double>",
+    )
+    a, b = F.col("`my vec`"), F.col("`b.c`")
+    d_ab = _column_dot(a, b)
+    diff = F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double"))
+                   * (x.cast("double") - y.cast("double"))),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    want = df.select(
+        "id", d_ab, F.sqrt(_column_dot(a, a)),
+        d_ab / (F.sqrt(_column_dot(a, a)) * F.sqrt(_column_dot(b, b))), diff,
+    ).collect()
+    got = df.select(
+        "id", S.dot("my vec", "b.c"), S.l2_norm("my vec"), S.cosine("my vec", "b.c"),
+        S.l2sq("my vec", "b.c"),
+    ).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    with pytest.raises(TypeError, match="column NAME"):
+        S.cosine(F.col("a"), F.col("b"))
+
+
+def test_cosine_plan_build_py4j_budget(py4j_round_trips):
+    """Building ``cosine`` is one parsed SQL expression: at most 20 py4j
+    round trips (the F.zip_with lambda form took about 340)."""
+    _, calls = py4j_round_trips(lambda: S.cosine("a", "b"))
+    assert 0 < calls <= 20, calls

@@ -269,13 +269,20 @@ def test_lsh_bucket_expr_matches_reference(spark):
         "id long, v array<double>",
     )
 
+    def dot(a, b):  # the Column-API fold S.dot was before it took names
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+
     def reference(vec, planes):
         bucket = F.lit(0).cast("long")
         for i, p in enumerate(planes):
             plane = F.array(*[F.lit(x) for x in p])
             bucket = bucket.bitwiseOR(
                 F.when(
-                    S.dot(vec, plane) > 0,
+                    dot(vec, plane) > 0,
                     F.shiftleft(F.lit(1).cast("long"), i),
                 ).otherwise(F.lit(0).cast("long"))
             )

@@ -281,6 +281,86 @@ def test_txstore_schema_evolution_merge_schema(spark, tmp_path):
     assert by_k == {1: None, 2: 9.5}
 
 
+def _flat_dir_paths(t):
+    m = t._manifest(t.latest_version())
+    return [str(t.path / "data" / d) for d in m["dirs"]]
+
+
+def _repr_rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+def test_txstore_flat_read_uses_recorded_schema(spark, spark_jobs, tmp_path):
+    """Flat dirs that all record the same schema are read with it: the
+    snapshot has the schema parquet inference finds (every column
+    nullable, types and names exact), the same rows, and planning the
+    read submits no Spark job (inference runs a footer-reading job)."""
+    import datetime
+    import decimal
+
+    from pyspark.sql.types import (
+        ArrayType, DecimalType, DoubleType, IntegerType, LongType, StringType,
+        StructField, StructType, TimestampType,
+    )
+
+    schema = StructType([
+        StructField("ts", TimestampType()),
+        StructField("amount", DecimalType(12, 2)),
+        StructField("vec", ArrayType(DoubleType(), containsNull=False)),
+        StructField("info", StructType([
+            StructField("a", IntegerType(), False), StructField("b", StringType()),
+        ])),
+        StructField("id", LongType(), False),
+        StructField("my col", StringType()),
+    ])
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.append(spark.createDataFrame([
+        (datetime.datetime(2024, 1, 2, 3, 4, 5), decimal.Decimal("1234.50"),
+         [1.5, -2.0], (1, "x"), 1, "a b"),
+        (None, None, [], (2, None), 2, None),
+    ], schema))
+    t.append(spark.createDataFrame([
+        (datetime.datetime(2023, 12, 31), decimal.Decimal("-0.01"), [0.0], (3, "y"), 3, "c"),
+    ], schema))
+
+    got, jobs = spark_jobs(t.read)
+    assert jobs == 0
+    inferred = spark.read.parquet(*_flat_dir_paths(t))
+    assert got.schema.jsonValue() == inferred.schema.jsonValue()
+    assert all(f.nullable for f in got.schema.fields)
+    assert _repr_rows(got) == _repr_rows(inferred)
+    assert len(_repr_rows(got)) == 3
+    # pruned reads take the same path
+    one, jobs = spark_jobs(lambda: t.read(where_in={"id": [3]}))
+    assert jobs == 0 and [r["my col"] for r in one.collect()] == ["c"]
+
+
+@pytest.mark.parametrize(
+    "second",
+    [
+        "k long, v string, extra double",  # an added column
+        "k long not null, v string",  # nullability only
+    ],
+)
+def test_txstore_flat_read_differing_recorded_schemas_infers(spark, tmp_path, second):
+    """Flat dirs recording different schemas keep parquet inference:
+    the read equals Spark's own multi-path read of the same dirs, and
+    ``merge_schema=True`` equals Spark's merged read."""
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.append(spark.createDataFrame([(1, "a")], "k long, v string"))
+    row = (2, "b", 0.5) if "extra" in second else (2, "b")
+    t.append(spark.createDataFrame([row], second))
+    paths = _flat_dir_paths(t)
+
+    plain, merged = t.read(), t.read(merge_schema=True)
+    want = spark.read.parquet(*paths)
+    want_merged = spark.read.option("mergeSchema", "true").parquet(*paths)
+    assert plain.schema.jsonValue() == want.schema.jsonValue()
+    assert _repr_rows(plain) == _repr_rows(want)
+    assert merged.schema.jsonValue() == want_merged.schema.jsonValue()
+    assert _repr_rows(merged) == _repr_rows(want_merged)
+
+
 def test_txstore_restore_rolls_back_as_new_commit(spark, tmp_path):
     """RESTORE: the table returns to an old snapshot via a NEW manifest
     that re-references the old dirs (no data copy), history remains

@@ -5,10 +5,12 @@ Usage:
 
 Runs ONE registered query with the bench's session/protocol (untimed
 warm rep, then ``reps`` timed fn()+count() passes), prints per-rep
-seconds, py4j round trips and the median, and — from the Spark event
-log — the timed reps' per-job wall clock plus the inter-job driver
-gaps, which is how driver-scheduled overhead (manifest fsyncs, tiny
-metadata jobs, py4j chatter) shows up (optimization guide §1.1/§7.3).
+seconds, py4j round trips, Spark jobs (one job group per rep; jobs
+that engine helper threads submit carry no group and show only in the
+event-log window) and the median, and — from the Spark event log —
+the timed reps' per-job wall clock plus the inter-job driver gaps,
+which is how driver-scheduled overhead (manifest fsyncs, tiny metadata
+jobs, py4j chatter) shows up (optimization guide §1.1/§7.3).
 Each round trip is one ``send_command`` on the py4j gateway client:
 building a plan from ``F.*`` Column nodes costs several per node,
 while SQL text costs one parse.
@@ -74,24 +76,34 @@ def main() -> None:
         return send(*args, **kwargs)
 
     client.send_command = counting_send
+    sc = spark.sparkContext
     t_marks = []
     times = []
     rep_trips = []
+    rep_jobs = []
     for r in range(reps):
         trips[0] = 0
+        # the group id alone: a group description would replace the
+        # call sites in the per-job trace below
+        sc.setLocalProperty("spark.jobGroup.id", f"profile-rep-{r}")
         t0 = time.time()
         n = q.fn(spark, sf_dir).count()
         dt = time.time() - t0
         t_marks.append((t0, time.time()))
         times.append(dt)
         rep_trips.append(trips[0])
-        print(f"rep {r + 1}: {dt:.3f}s rows={n} py4j={trips[0]}", file=sys.stderr)
+        rep_jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"profile-rep-{r}")))
+        print(
+            f"rep {r + 1}: {dt:.3f}s rows={n} py4j={rep_trips[-1]} jobs={rep_jobs[-1]}",
+            file=sys.stderr,
+        )
     client.send_command = send
     spark.stop()
 
     med = sorted(times)[len(times) // 2]
     print(f"median: {med:.3f}s over {reps} reps  {[round(t, 3) for t in times]}")
     print(f"py4j round trips per rep: {rep_trips}")
+    print(f"Spark jobs per rep: {rep_jobs}")
 
     # parse event log for the timed window (Spark 4 rolling layout:
     # eventlog_v2_<appId>/events_1_<appId>[.zstd])
