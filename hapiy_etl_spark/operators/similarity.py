@@ -77,9 +77,14 @@ def l2_norm(a: str) -> Column:
 
 
 def cosine(a: str, b: str) -> Column:
+    """a·b / (‖a‖‖b‖) in double precision. A pair where either vector
+    has zero norm has no angle and scores NULL (``try_divide``), so it
+    ranks last under ``DESC`` instead of raising ``DIVIDE_BY_ZERO``
+    under ANSI mode and aborting the whole top-k or sink batch."""
     qa, qb = _quote(a), _quote(b)
     return F.expr(
-        f"{_dot_sql(qa, qb)} / (sqrt({_dot_sql(qa, qa)}) * sqrt({_dot_sql(qb, qb)}))"
+        f"try_divide({_dot_sql(qa, qb)}, "
+        f"sqrt({_dot_sql(qa, qa)}) * sqrt({_dot_sql(qb, qb)}))"
     )
 
 
@@ -101,7 +106,8 @@ def cosine_topk(
 
     Norms are precomputed per side (not per pair); the query side is
     broadcast. Deterministic tie-break on corpus id. Self-matches
-    (same id) are excluded.
+    (same id) are excluded. A zero-norm vector scores NULL against
+    everything and ranks last (see :func:`cosine`).
     Output: (query_id, corpus_id, rank, cosine_sim).
     """
     q = queries.select(
@@ -116,7 +122,9 @@ def cosine_topk(
         .select(
             "__qid",
             "__cid",
-            (dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn"))).alias("__sim"),
+            F.try_divide(dot("__qv", "__cv"), F.col("__qn") * F.col("__cn")).alias(
+                "__sim"
+            ),
         )
     )
     w = W.partitionBy("__qid").orderBy(F.col("__sim").desc(), F.col("__cid"))

@@ -495,12 +495,16 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature table is a plain append-only TxTable). The two appends
     # are independent writers, so they submit from a 2-thread pool
     # (optimization r16, guide §2.6) and the second job back-fills the
-    # first's task tail; the optimistic manifest commit resolves the
-    # version race exactly as documented (the loser re-publishes its
-    # already-spooled dir). Index CONTENT is identical either way —
-    # only the dir commit order can swap, and every consumer unions
-    # the snapshot.
+    # first's task tail: 3.05 s p50 against 4.03 s [3.89, 4.44] for the
+    # serial form (sf0.1, 4 vCPUs, 10 in-process ABBA pairs). The
+    # optimistic manifest commit resolves the version race exactly as
+    # documented (the loser re-publishes its already-spooled dir).
+    # Index CONTENT is identical either way — only the dir commit order
+    # can swap, and every consumer unions the snapshot. The threads
+    # inherit the caller's job group, so their jobs are attributed to it.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     halves = corpus.withColumn("h", F.pmod(F.xxhash64("doc_id"), F.lit(2)))
     sig_halves = [
@@ -511,7 +515,7 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(2)
     ]
     with ThreadPoolExecutor(max_workers=2) as pool:
-        list(pool.map(idx.append, sig_halves))
+        list(pool.map(inheritable_thread_target(spark)(idx.append), sig_halves))
     batch_sigs = D.minhash_signatures(
         batch, "doc_id", "text", n=3, portable=True
     )

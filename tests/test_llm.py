@@ -2488,3 +2488,27 @@ def test_cosine_plan_build_py4j_budget(py4j_round_trips):
     round trips (the F.zip_with lambda form took about 340)."""
     _, calls = py4j_round_trips(lambda: S.cosine("a", "b"))
     assert 0 < calls <= 20, calls
+
+
+def test_cosine_zero_norm_scores_null_and_ranks_last(spark):
+    """Under ANSI mode a zero-norm vector used to raise DIVIDE_BY_ZERO
+    and abort the whole top-k; it now scores NULL against everything
+    and ranks after every scored neighbor."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.6, 0.8]), (4, [-1.0, 0.1])],
+        "id long, embedding array<double>",
+    )
+    got = dict(
+        df.alias("a")
+        .crossJoin(df.where("id = 2").selectExpr("embedding AS z"))
+        .select("id", S.cosine("embedding", "z"))
+        .collect()
+    )
+    assert got == {1: None, 2: None, 3: None, 4: None}
+    top = S.cosine_topk(df, df, "id", "id", k=3).collect()
+    ranked = {}
+    for r in top:
+        ranked.setdefault(r.id, []).append((r.rank, r.neighbor_id, r.cosine_sim))
+    assert sorted(ranked[1]) == [(1, 3, 0.6), (2, 4, -0.995037), (3, 2, None)]
+    assert [n for _, n, sim in sorted(ranked[2])] == [1, 3, 4]
+    assert all(sim is None for _, _, sim in ranked[2])

@@ -5,9 +5,11 @@ Three levers, each pinned here:
    fires only between the size floor and the parallelism ceiling, and
    never changes results (hash-repartition above set-semantics
    consumers).
-2. ``TxTable._grouped_column_stats`` / ``_grouped_bloom_build`` — the
-   one-pass clustered-compaction metadata (guide §1.2): must be
-   byte-identical to the per-dir forms they replaced.
+2. The clustered-compaction metadata (guide §1.2): the per-dir
+   metadata kernel (``txstore._DirMeta``), grouped by bucket in one
+   pass, must record byte-identical entries to a per-group reference —
+   the one-job-per-dir min/max agg and the explode/``distinct``/Python
+   fold Bloom build it replaced, kept below as test-local references.
 3. ``ann_recall_audit``'s overlapped checkpoints (guide §2.6) are
    covered by the existing recall tests (content-deterministic arms);
    no new surface.
@@ -20,7 +22,47 @@ import pytest
 from pyspark.sql import functions as F
 
 from hapiy_etl_spark.io import SPREAD_MIN_BYTES, spread
-from hapiy_etl_spark.operators.txstore import TxTable
+from hapiy_etl_spark.operators.txstore import TxTable, _DirMeta, _stat_json_value
+
+
+def ref_column_stats(df, cols):
+    """Reference {col: [min, max]}: one agg job, JSON-normalized."""
+    aggs = []
+    for c in cols:
+        aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
+    row = df.agg(*aggs).collect()[0]
+    out = {}
+    for c in cols:
+        mn = _stat_json_value(row[f"__mn_{c}"])
+        mx = _stat_json_value(row[f"__mx_{c}"])
+        out[c] = [mn, mx] if mn is not None and mx is not None else [None, None]
+    return out
+
+
+def ref_bloom(df, col, bits, k):
+    """Reference bloom entry: the distinct xxhash64 bit positions of the
+    non-NULL values, collected and folded into the bitmap in Python."""
+    import base64
+
+    seeds = F.array(
+        *[F.pmod(F.xxhash64(F.col(col), F.lit(i)), F.lit(bits)) for i in range(k)]
+    )
+    rows = (
+        df.where(F.col(col).isNotNull())
+        .select(F.explode(seeds).alias("p"))
+        .distinct()
+        .collect()
+    )
+    buf = bytearray(bits // 8)
+    for r in rows:
+        pos = int(r["p"])
+        buf[pos // 8] |= 1 << (pos % 8)
+    return {
+        "b64": base64.b64encode(bytes(buf)).decode("ascii"),
+        "type": df.schema[col].dataType.simpleString(),
+        "bits": bits,
+        "k": k,
+    }
 
 
 def test_spread_noop_below_size_floor(spark, tmp_path):
@@ -88,26 +130,24 @@ def test_grouped_stats_match_per_dir_stats(spark, tmp_path):
         }
     )
     df = spark.createDataFrame(pdf)
-    t = TxTable(spark, str(tmp_path / "t"))
-    grouped = t._grouped_column_stats(df, "g", ["k", "s", "ts", "f"])
+    cols = ["k", "s", "ts", "f"]
+    grouped = _DirMeta(df.schema, cols).over(df, by="g")
     for g in (0, 1, 2):
-        per_dir = t._column_stats(
-            df.where(F.col("g") == g), ["k", "s", "ts", "f"]
-        )
-        assert grouped[g] == per_dir, f"group {g}: {grouped[g]} != {per_dir}"
+        per_dir = ref_column_stats(df.where(F.col("g") == g), cols)
+        assert grouped[g] == (per_dir, {}), f"group {g}: {grouped[g]} != {per_dir}"
 
 
 def test_grouped_bloom_matches_per_dir_bloom(spark, tmp_path):
+    # narrower than, as wide as, and wider than one 32768-bit bitmap
+    # chunk, including a partial last chunk
     df = spark.createDataFrame(
         [(i % 3, i * 37) for i in range(300)], "g int, doc_id long"
     )
-    t = TxTable(spark, str(tmp_path / "t"))
-    grouped = t._grouped_bloom_build(df, "g", "doc_id", bits=1 << 14, k=5)
-    for g in (0, 1, 2):
-        per_dir = t._bloom_build(
-            df.where(F.col("g") == g), ["doc_id"], bits=1 << 14, k=5
-        )["doc_id"]
-        assert grouped[g] == per_dir, f"group {g} bloom diverged"
+    for bits, k in ((1 << 14, 5), (1 << 15, 1), (40_000, 3), (1 << 16, 7)):
+        grouped = _DirMeta(df.schema, blooms={"doc_id": (bits, k)}).over(df, by="g")
+        for g in (0, 1, 2):
+            per_dir = ref_bloom(df.where(F.col("g") == g), "doc_id", bits, k)
+            assert grouped[g][1]["doc_id"] == per_dir, f"group {g} bloom diverged"
 
 
 def test_clustered_optimize_metadata_unchanged_by_grouping(spark, tmp_path):

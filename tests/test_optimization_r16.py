@@ -6,11 +6,13 @@ Pinned here:
    (np.array_equal) to the serial loop across the geometries the ANN
    family actually uses — a drifted codebook would silently move every
    lossy ranking and the hash-pinned index fixtures.
-2. ``TxTable._grouped_bloom_build`` executor-side bitmap aggregation
-   (guide §5, VERDICT r15 item 7): entries stay byte-identical to the
-   per-dir form, the driver collect is bounded at one row per group,
-   and an all-NULL bucket now records the per-dir form's all-zero
-   bloom (ADVICE r15) instead of silently dropping the entry.
+2. The bucket-grouped Bloom build of a clustered compaction (guide §5,
+   VERDICT r15 item 7), now the per-dir metadata kernel
+   (``txstore._DirMeta``) grouped by bucket: entries stay
+   byte-identical to the per-group reference build, the driver collect
+   is bounded at one row per group, geometry is validated, and an
+   all-NULL bucket records the all-zero bloom (ADVICE r15) instead of
+   silently dropping the entry.
 3. ``dedup_minhash_lsh``'s content-prefix demo slice (VERDICT r15
    item 8): non-degenerate output at the oracle SF.
 """
@@ -21,7 +23,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from hapiy_etl_spark.operators.txstore import TxTable
+from hapiy_etl_spark.operators.txstore import TxTable, _DirMeta
+from tests.test_optimization_r15 import ref_bloom
 
 
 def _serial_codebooks(sample, m, n_codes, seed, iters=8):
@@ -127,50 +130,42 @@ def test_pq_codebooks_hung_pool_falls_back_to_serial(monkeypatch):
 
 
 def test_grouped_bloom_collect_is_one_row_per_group(spark, tmp_path):
-    # the r16 executor-side fold: entries byte-identical to per-dir AND
-    # the driver-side materialization bounded at n_groups rows
+    # the executor-side fold: entries byte-identical to the per-group
+    # reference AND the driver-side materialization one row per group
     df = spark.createDataFrame(
         [(i % 4, i * 37) for i in range(400)], "g int, doc_id long"
     )
-    t = TxTable(spark, str(tmp_path / "t"))
-    grouped = t._grouped_bloom_build(df, "g", "doc_id", bits=1 << 14, k=5)
-    assert set(grouped) == {0, 1, 2, 3}
-    for g in range(4):
-        per_dir = t._bloom_build(
-            df.where(F.col("g") == g), ["doc_id"], bits=1 << 14, k=5
-        )["doc_id"]
-        assert grouped[g] == per_dir, f"group {g} bloom diverged"
+    meta = _DirMeta(df.schema, blooms={"doc_id": (1 << 14, 5)})
+    rows = df.groupBy("g").agg(*meta.aggs()).collect()
+    assert sorted(r["g"] for r in rows) == [0, 1, 2, 3]
+    for r in rows:
+        per_dir = ref_bloom(df.where(F.col("g") == r["g"]), "doc_id", 1 << 14, 5)
+        assert meta.decode(r)[1]["doc_id"] == per_dir, f"group {r['g']} bloom diverged"
 
 
 def test_grouped_bloom_validates_geometry(spark, tmp_path):
-    # ADVICE r15: the grouped form must validate bits/k like the
-    # per-dir form (clear ValueError, not a mid-build IndexError)
+    # ADVICE r15: every bloom build validates bits/k (clear ValueError,
+    # not a mid-build IndexError), before any job runs
     df = spark.createDataFrame([(0, 1)], "g int, doc_id long")
-    t = TxTable(spark, str(tmp_path / "t"))
     with pytest.raises(ValueError, match="multiple of 8"):
-        t._grouped_bloom_build(df, "g", "doc_id", bits=1001, k=5)
+        _DirMeta(df.schema, blooms={"doc_id": (1001, 5)})
     with pytest.raises(ValueError, match="positive"):
-        t._grouped_bloom_build(df, "g", "doc_id", bits=1024, k=0)
+        _DirMeta(df.schema, blooms={"doc_id": (1024, 0)})
 
 
 def test_grouped_bloom_all_null_bucket_records_zero_bloom(spark, tmp_path):
     # ADVICE r15: a bucket whose bloom column is entirely NULL records
-    # an ALL-ZERO bloom (prunes every probe), matching the per-dir form
+    # an ALL-ZERO bloom (prunes every probe), matching the reference
     df = spark.createDataFrame(
         [(0, 5), (0, 9), (1, None)], "g int, doc_id long"
     )
-    t = TxTable(spark, str(tmp_path / "t"))
-    grouped = t._grouped_bloom_build(
-        df, "g", "doc_id", bits=1 << 12, k=5, groups=[0, 1]
-    )
+    grouped = _DirMeta(df.schema, blooms={"doc_id": (1 << 12, 5)}).over(df, by="g")
     assert 1 in grouped, "all-NULL bucket lost its bloom entry"
-    per_dir_null = t._bloom_build(
-        df.where(F.col("g") == 1), ["doc_id"], bits=1 << 12, k=5
-    )["doc_id"]
-    assert grouped[1] == per_dir_null  # the all-zero bitmap
+    per_dir_null = ref_bloom(df.where(F.col("g") == 1), "doc_id", 1 << 12, 5)
+    assert grouped[1][1]["doc_id"] == per_dir_null  # the all-zero bitmap
     import base64
 
-    assert not any(base64.b64decode(grouped[1]["b64"]))
+    assert not any(base64.b64decode(grouped[1][1]["doc_id"]["b64"]))
 
 
 def test_clustered_optimize_all_null_bucket_keeps_bloom(spark, tmp_path):

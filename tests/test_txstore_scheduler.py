@@ -4309,3 +4309,264 @@ def test_txstore_scan_and_rewrites_share_one_pruning_rule(spark, tmp_path):
             "ts BETWEEN 150 AND 350 AND k BETWEEN 0 AND 15", range_hint=rng2
         )
     ) == {10}
+
+
+# -- golden manifest matrix ---------------------------------------------------
+# Every write that records stats or blooms (append, group commit, merge,
+# optimize_clustered, retighten_blooms) must record exactly the entries
+# the earlier per-site stats and bloom functions recorded. Each scenario
+# below builds a table from deterministic input; its manifest's
+# stats/blooms/schemas maps, keyed by dir POSITION (dir names are
+# random) and hashed as canonical JSON, must equal the digests recorded
+# from those functions.
+
+
+def _golden_maps(t: TxTable) -> dict:
+    import hashlib
+
+    m = t._manifest(t.latest_version())
+    pos = {d: i for i, d in enumerate(m["dirs"])}
+    return {
+        k: hashlib.sha256(
+            json.dumps(
+                {pos[d]: v for d, v in (m.get(k) or {}).items()}, sort_keys=True
+            ).encode()
+        ).hexdigest()[:16]
+        for k in ("stats", "blooms", "schemas")
+    }
+
+
+def _golden_bloom_types(spark, t):
+    rows = [
+        (
+            None if i % 17 == 0 else f"doc-{i}",
+            i * 3 - 400,
+            None if i % 23 == 0 else i * 2**40,
+            i * 7 - 1000,
+            i % 100 - 50,
+        )
+        for i in range(300)
+    ]
+    cols = ["s", "i", "b", "sm", "ti"]
+    df = spark.createDataFrame(
+        rows, "s string, i int, b bigint, sm smallint, ti tinyint"
+    )
+    t.append(df, stats_cols=cols, bloom_cols=cols)
+
+
+def _golden_geometry(spark, t):
+    for bits in (1024, 16384, 32768, 65536, 2**20):
+        for k in (1, 5, 7):
+            lo = bits // 8 + k
+            df = spark.createDataFrame(
+                [(lo + i * 13, f"g{bits}-{k}-{i}") for i in range(150)],
+                "k long, s string",
+            )
+            t.append(df, bloom_cols=["k", "s"], bloom_bits=bits, bloom_k=k)
+
+
+def _golden_edge_values(spark, t):
+    import datetime as dt
+    from decimal import Decimal
+
+    t.append(
+        spark.createDataFrame([(None, i) for i in range(20)], "s string, k long")
+        .withColumn("k", F.lit(None).cast("long")),
+        stats_cols=["s", "k"],
+        bloom_cols=["s", "k"],
+    )
+    t.append(
+        spark.createDataFrame([], "s string, k long"),
+        stats_cols=["s", "k"],
+        bloom_cols=["s", "k"],
+    )
+    rows = [
+        (
+            dt.datetime(2031, 6, 1, 12, 0, 0, 123457 + i),
+            dt.date(2030, 1, 1 + i),
+            Decimal(f"{i}.25"),
+            float("nan") if i == 3 else i * 1.5,
+            i * 0.25,
+            f"v{i:03d}",
+        )
+        for i in range(10)
+    ] + [
+        (
+            dt.datetime(1969, 12, 31, 23, 59, 59, 999999),
+            dt.date(1969, 7, 20),
+            Decimal("-1.50"),
+            -0.5,
+            -2.0,
+            "a",
+        )
+    ]
+    t.append(
+        spark.createDataFrame(
+            rows,
+            "ts timestamp, d date, dec decimal(10,2), fn double, f double, s string",
+        ),
+        stats_cols=["ts", "d", "dec", "fn", "f", "s"],
+    )
+
+
+def _golden_base(spark, t, **kw):
+    for j in range(3):
+        t.append(
+            spark.createDataFrame(
+                [
+                    (
+                        i * 3 + j,
+                        None if i % 11 == 0 else f"s{i * 3 + j}",
+                        (i * 3 + j) * 0.5,
+                    )
+                    for i in range(400)
+                ],
+                "k long, s string, v double",
+            ),
+            **kw,
+        )
+
+
+def _golden_optimize_explicit(spark, t):
+    _golden_base(spark, t, stats_cols=["k"])
+    t.optimize_clustered(
+        "k", n_dirs=4, stats_cols=["k", "v"], bloom_cols=["k", "s"],
+        bloom_bits=16384, bloom_k=5,
+    )
+
+
+def _golden_optimize_inherited(spark, t):
+    _golden_base(
+        spark, t, stats_cols=["k"], bloom_cols=["k", "s"], bloom_bits=65536,
+        bloom_k=7,
+    )
+    t.optimize_clustered("k", n_dirs=3)
+
+
+def _golden_merge(spark, t):
+    _golden_base(spark, t, stats_cols=["k", "v"], bloom_cols=["k", "s"])
+    batch = lambda ks: spark.createDataFrame(
+        [(k, f"m{k}", k * 2.0) for k in ks], "k long, s string, v double"
+    )
+    t.merge(batch([5, 6, 7, 2000]), keys=["k"], prune_col="k")
+    t.merge(batch([5000, 5001]), keys=["k"], prune_col="k")  # prunes every dir
+    t.merge(batch([1, 900, 1199]), keys=["k"])
+
+
+def _golden_retighten(spark, t):
+    for j in range(3):
+        t.append(
+            spark.createDataFrame(
+                [(i * 3 + j, f"r{i * 3 + j}") for i in range(1500)],
+                "k long, s string",
+            ),
+            stats_cols=["k"],
+            bloom_cols=["k", "s"],
+            bloom_bits=1024,
+        )
+    t.delete_keys([4, 5, 3000], on="k")
+    t.retighten_blooms(["k", "s"], fpr_threshold=0.01)
+
+
+_GOLDEN_SCENARIOS = {
+    "bloom_types": _golden_bloom_types,
+    "geometry": _golden_geometry,
+    "edge_values": _golden_edge_values,
+    "optimize_explicit": _golden_optimize_explicit,
+    "optimize_inherited": _golden_optimize_inherited,
+    "merge": _golden_merge,
+    "retighten": _golden_retighten,
+}
+
+_GOLDEN_MANIFESTS = {
+    "bloom_types": {"stats": "ad6c4169c81cd43b", "blooms": "dce3d64a88879080", "schemas": "cb5c37824970c8ee"},
+    "edge_values": {"stats": "6461a524204a2325", "blooms": "04dd757011222d08", "schemas": "2a6c7b6f1a12b5e3"},
+    "geometry": {"stats": "44136fa355b3678a", "blooms": "e610eb3512f01e78", "schemas": "859fc8ca81d1124e"},
+    "merge": {"stats": "8473595cc675a7a3", "blooms": "e2c8530025b4a7c8", "schemas": "473129acc9debab1"},
+    "optimize_explicit": {"stats": "e6ce80737e6a5272", "blooms": "3c2c06a4d17cf4bf", "schemas": "23e0377f02f363d2"},
+    "optimize_inherited": {"stats": "a39178f24d5cf7e6", "blooms": "e142d737b4833d75", "schemas": "a3f758e016947734"},
+    "retighten": {"stats": "5a1c6f54e48b0966", "blooms": "2f015e0366da95cb", "schemas": "b45bc0fd853f909e"},
+}
+
+
+@pytest.mark.parametrize("scenario", sorted(_GOLDEN_SCENARIOS))
+def test_txstore_golden_manifest_matrix(spark, tmp_path, scenario):
+    t = TxTable(spark, str(tmp_path / "t"))
+    _GOLDEN_SCENARIOS[scenario](spark, t)
+    got = _golden_maps(t)
+    assert got == _GOLDEN_MANIFESTS[scenario]
+
+
+# -- metadata job budgets ----------------------------------------------------
+# Stats and blooms are aggregates observed on the write (or one grouped
+# pass for a clustered rewrite), so recording them costs no job of its own.
+
+
+def test_txstore_append_stats_and_blooms_one_job(spark, spark_jobs, tmp_path):
+    t = TxTable(spark, str(tmp_path / "t"))
+    df = spark.createDataFrame(
+        [(i, f"s{i}") for i in range(200)], "k long, s string"
+    )
+    _, n = spark_jobs(
+        lambda: t.append(df, stats_cols=["k"], bloom_cols=["k", "s"])
+    )
+    assert n == 1
+    m = t._manifest(t.latest_version())
+    (d,) = m["dirs"]
+    assert m["stats"][d] == {"k": [0, 199]}
+    assert list(m["blooms"][d]) == ["k", "s"]
+
+
+def test_txgroup_dedup_batch_commit_runs_only_its_writes(
+    spark, spark_jobs, tmp_path, monkeypatch
+):
+    from hapiy_etl_spark.operators import txstore as TX
+    from hapiy_etl_spark.streaming.jobs import ingest_dedup_batch
+
+    # each staged frame is an anti-join against the pinned drop set, so
+    # writing it plainly takes its own jobs (a broadcast + the write);
+    # the commit, stats on the band index included, must take no more
+    commit = TX.txgroup_commit_appends
+    seen = []
+
+    def counted(group_path, appends):
+        plain = 0
+        for i, a in enumerate(appends):
+            out = str(tmp_path / f"plain-{len(seen)}-{i}")
+            plain += spark_jobs(lambda: a["df"].write.parquet(out))[1]
+        out, n = spark_jobs(lambda: commit(group_path, appends))
+        seen.append((len(appends), n, plain))
+        return out
+
+    monkeypatch.setattr(TX, "txgroup_commit_appends", counted)
+    c, s = str(tmp_path / "corpus"), str(tmp_path / "sigs")
+    for e in (1, 2):
+        batch = spark.createDataFrame(
+            [
+                (e * 100 + i, " ".join(f"e{e}d{i}w{j}" for j in range(20)))
+                for i in range(30)
+            ],
+            "doc_id long, text string",
+        )
+        ingest_dedup_batch(batch, c, s, epoch_id=e, run_id="r")
+    assert [(k, n) for k, n, _ in seen] == [(2, plain) for _, _, plain in seen]
+    sig = TxTable(spark, s)
+    m = sig._manifest(sig.latest_version())
+    assert all(m["stats"][d]["bb"][0] is not None for d in m["dirs"])
+
+
+def test_optimize_clustered_bloom_cols_add_no_job(spark, spark_jobs, tmp_path):
+    df = spark.createDataFrame(
+        [(i, f"s{i}", i * 0.5) for i in range(2000)], "k long, s string, v double"
+    )
+    jobs = {}
+    for name, bloom_cols in (("plain", []), ("bloomed", ["k", "s"])):
+        t = TxTable(spark, str(tmp_path / name))
+        t.append(df)
+        _, jobs[name] = spark_jobs(
+            lambda: t.optimize_clustered("k", n_dirs=4, bloom_cols=bloom_cols)
+        )
+        m = t._manifest(t.latest_version())
+        assert len(m["dirs"]) == 4
+        assert all(list(m.get("blooms", {}).get(d, {})) == bloom_cols for d in m["dirs"])
+    assert jobs["bloomed"] == jobs["plain"], jobs

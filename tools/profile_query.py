@@ -5,12 +5,14 @@ Usage:
 
 Runs ONE registered query with the bench's session/protocol (untimed
 warm rep, then ``reps`` timed fn()+count() passes), prints per-rep
-seconds, py4j round trips, Spark jobs (one job group per rep; jobs
-that engine helper threads submit carry no group and show only in the
-event-log window) and the median, and — from the Spark event log —
-the timed reps' per-job wall clock plus the inter-job driver gaps,
-which is how driver-scheduled overhead (manifest fsyncs, tiny metadata
-jobs, py4j chatter) shows up (optimization guide §1.1/§7.3).
+seconds, py4j round trips, Spark jobs (one job group per rep) and the
+median, and — from the Spark event log — the timed reps' per-job wall
+clock plus the inter-job driver gaps within each rep, which is how
+driver-scheduled overhead (manifest fsyncs, tiny metadata jobs, py4j
+chatter) shows up (optimization guide §1.1/§7.3). Event-log jobs are
+selected by their ``profile-rep-*`` job group, not by time, so jobs of
+neighbouring work are never counted; the engine's helper-thread pools
+pass the caller's job group on, so their jobs count with the rep.
 Each round trip is one ``send_command`` on the py4j gateway client:
 building a plan from ``F.*`` Column nodes costs several per node,
 while SQL text costs one parse.
@@ -77,7 +79,6 @@ def main() -> None:
 
     client.send_command = counting_send
     sc = spark.sparkContext
-    t_marks = []
     times = []
     rep_trips = []
     rep_jobs = []
@@ -89,7 +90,6 @@ def main() -> None:
         t0 = time.time()
         n = q.fn(spark, sf_dir).count()
         dt = time.time() - t0
-        t_marks.append((t0, time.time()))
         times.append(dt)
         rep_trips.append(trips[0])
         rep_jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"profile-rep-{r}")))
@@ -105,7 +105,7 @@ def main() -> None:
     print(f"py4j round trips per rep: {rep_trips}")
     print(f"Spark jobs per rep: {rep_jobs}")
 
-    # parse event log for the timed window (Spark 4 rolling layout:
+    # parse the event log for the timed reps' jobs (Spark 4 rolling layout:
     # eventlog_v2_<appId>/events_1_<appId>[.zstd])
     ev = evdir / app_id
     if not ev.exists():
@@ -128,33 +128,33 @@ def main() -> None:
             except ValueError:
                 continue
             if e.get("Event") == "SparkListenerJobStart":
-                jobs[e["Job ID"]] = [e["Submission Time"] / 1000.0, None, None]
                 props = e.get("Properties") or {}
-                jobs[e["Job ID"]][2] = props.get(
-                    "spark.job.description", ""
-                ) or props.get("callSite.short", "")
+                group = props.get("spark.jobGroup.id") or ""
+                if group.startswith("profile-rep-"):
+                    desc = props.get("spark.job.description", "") or props.get(
+                        "callSite.short", ""
+                    )
+                    jobs[e["Job ID"]] = [e["Submission Time"] / 1000.0, None, desc, group]
             elif e.get("Event") == "SparkListenerJobEnd":
                 if e["Job ID"] in jobs:
                     jobs[e["Job ID"]][1] = e["Completion Time"] / 1000.0
 
-    lo, hi = t_marks[0][0], t_marks[-1][1]
-    win = sorted(
-        (s, e2, jid, desc)
-        for jid, (s, e2, desc) in jobs.items()
-        if e2 and s >= lo - 0.5 and e2 <= hi + 0.5
+    timed = sorted(
+        (s, e2, jid, desc, group)
+        for jid, (s, e2, desc, group) in jobs.items()
+        if e2
     )
-    total_job = sum(e2 - s for s, e2, _, _ in win)
+    total_job = sum(e2 - s for s, e2, _, _, _ in timed)
     gaps = 0.0
-    for i in range(1, len(win)):
-        g = win[i][0] - win[i - 1][1]
-        if g > 0:
-            gaps += g
+    for prev, cur in zip(timed, timed[1:]):
+        if prev[4] == cur[4] and cur[0] > prev[1]:
+            gaps += cur[0] - prev[1]
     print(
-        f"timed window: {len(win)} jobs, {total_job:.2f}s in jobs, "
+        f"timed reps: {len(timed)} jobs, {total_job:.2f}s in jobs, "
         f"{gaps:.2f}s inter-job gaps (over {reps} reps; per-rep ≈ "
-        f"{len(win) / reps:.0f} jobs / {gaps / reps:.2f}s gaps)"
+        f"{len(timed) / reps:.0f} jobs / {gaps / reps:.2f}s gaps)"
     )
-    for s, e2, jid, desc in win:
+    for s, e2, jid, desc, _ in timed:
         print(f"  job {jid}: {e2 - s:7.3f}s  {desc[:80]}")
 
 
