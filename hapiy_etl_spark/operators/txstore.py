@@ -236,19 +236,21 @@ _BITMAP_CHUNK_BITS = 32768
 class _DirMeta:
     """THE per-dir metadata kernel: one SQL-text aggregate list and its
     decoder, for every write that records stats or blooms (``append``
-    and the group commit observe it on their write, ``merge`` on its
-    batch pin, ``optimize_clustered`` groups it by bucket over its
-    spool, ``retighten_blooms`` runs it over one dir).
+    and the group commit observe it on their write, ``merge`` runs it
+    over its pinned batch, ``optimize_clustered`` groups it by bucket
+    over its spool, ``retighten_blooms`` runs it over one dir).
 
     - stats: ``min``/``max`` per column, recorded through
       ``_stat_json_value`` as ``[min, max]`` (``[None, None]`` when
       either bound is NULL or not JSON-safe);
-    - blooms: per column, one ``bitmap_construct_agg`` of
-      ``pmod(xxhash64(col, seed), bits)`` per hash seed and 32768-bit
-      chunk, OR-ed on the driver into the ``b64``/``type``/``bits``/``k``
-      entry. Spark's own xxhash64 over the column's NATIVE type is what
-      the probe replays with a cast literal, so build and probe never
-      disagree on representation. NULLs set no bit, so an all-NULL or
+    - blooms: per column and hash seed, the bit position
+      ``pmod(xxhash64(col, seed), bits)`` is projected once per row
+      (:meth:`project`), then one ``bitmap_construct_agg`` per
+      32768-bit chunk reads it; the chunks are OR-ed on the driver into
+      the ``b64``/``type``/``bits``/``k`` entry. Spark's own xxhash64
+      over the column's NATIVE type is what the probe replays with a
+      cast literal, so build and probe never disagree on
+      representation. NULLs set no bit, so an all-NULL or
       empty dir records an all-zero bitmap that prunes every probe.
 
     All three aggregates are idempotent (a re-evaluated row cannot
@@ -279,7 +281,23 @@ class _DirMeta:
     def __bool__(self) -> bool:
         return bool(self.stats_cols or self.blooms)
 
+    def _positions(self) -> dict[str, str]:
+        return {
+            f"__p{i}_{s}": f"CASE WHEN {_quote(c)} IS NOT NULL"
+            f" THEN pmod(xxhash64({_quote(c)}, {s}), {bits}) END"
+            for i, (c, (_, bits, k)) in enumerate(self.blooms.items())
+            for s in range(k)
+        }
+
+    def project(self, df: DataFrame, keep: Sequence[str] | None = None) -> DataFrame:
+        """``df`` (only its ``keep`` columns, if given) plus one Bloom
+        bit-position column per bloom column and hash seed: each row is
+        hashed once per seed, however many chunks :meth:`aggs` read."""
+        cols = ["*"] if keep is None else [_quote(c) for c in keep]
+        return df.selectExpr(*cols, *[f"{e} AS {n}" for n, e in self._positions().items()])
+
     def aggs(self) -> list:
+        """The aggregate list, over a frame from :meth:`project`."""
         from pyspark.sql import functions as F
 
         out = []
@@ -288,14 +306,19 @@ class _DirMeta:
         ch = _BITMAP_CHUNK_BITS
         for i, (c, (_, bits, k)) in enumerate(self.blooms.items()):
             for s in range(k):
-                p = f"pmod(xxhash64({_quote(c)}, {s}), {bits})"
                 for j in range(-(-bits // ch)):
                     out.append(
-                        f"bitmap_construct_agg(CASE WHEN {_quote(c)} IS NOT NULL"
-                        f" AND {p} DIV {ch} = {j} THEN {p} % {ch} END)"
-                        f" AS __bl{i}_{s}_{j}"
+                        f"bitmap_construct_agg(CASE WHEN __p{i}_{s} DIV {ch} = {j}"
+                        f" THEN __p{i}_{s} % {ch} END) AS __bl{i}_{s}_{j}"
                     )
         return [F.expr(a) for a in out]
+
+    def observe(self, df: DataFrame, name: str):
+        """``(df, observation)``: the kernel attached to whatever action
+        materializes ``df`` (``operators/metrics.observed``); the
+        returned frame has ``df``'s columns."""
+        seen_df, seen = observed(self.project(df), name, *self.aggs())
+        return seen_df.drop(*self._positions()), seen
 
     def decode(self, row) -> tuple[dict, dict]:
         """One aggregate row → ``(stats, blooms)`` manifest entries."""
@@ -327,6 +350,8 @@ class _DirMeta:
     def over(self, df: DataFrame, by: str | None = None):
         """The kernel as its own aggregate job over ``df``:
         ``(stats, blooms)``, or ``{group: (stats, blooms)}`` by ``by``."""
+        keep = list(dict.fromkeys(([by] if by else []) + self.stats_cols))
+        df = self.project(df, keep)
         if by is None:
             return self.decode(df.agg(*self.aggs()).collect()[0])
         return {
@@ -674,7 +699,7 @@ class TxTable:
         the output commit coordinator let commit."""
         d = f"s-{uuid.uuid4().hex[:12]}"
         if meta:
-            df, seen = observed(df, f"txmeta-{d}", *meta.aggs())
+            df, seen = meta.observe(df, f"txmeta-{d}")
         w = df.write
         if partition_by:
             # Hive-style layout INSIDE the snapshot dir: reads of this
@@ -862,7 +887,6 @@ class TxTable:
         m: dict,
         touched: list[str],
         batch: DataFrame,
-        pinned: tuple[dict, dict],
     ) -> tuple[dict, dict]:
         """``(stats, blooms)`` for a MERGE's rewritten dir. Every merged
         row is either a touched-dir survivor (verbatim, key unmatched) or
@@ -871,10 +895,9 @@ class TxTable:
         bound the dir for EVERY column, updates included (possibly
         wider than actual — conservative, never wrong). Without this a
         merge silently dropped pruning on exactly the tables that merge
-        most (VERDICT r7). The batch side comes from ``pinned`` (the
-        kernel observed on the batch pin against the first parent) and,
-        when a retry's parent records something else, from one kernel
-        aggregate over the batch. Per column:
+        most (VERDICT r7). The batch side is one kernel aggregate over
+        the (pinned) batch, for exactly what this parent records. Per
+        column:
 
         - touched dirs must ALL record it (``_union_stats`` /
           ``_union_blooms`` with identical bloom geometry; a missing dir
@@ -913,12 +936,7 @@ class TxTable:
                 if types.get(c) == e["type"]
             },
         )
-        bstats, bblooms = pinned
-        if any(c not in bstats for c in want.stats_cols) or any(
-            bblooms.get(c, {}).get("bits") != bits or bblooms[c]["k"] != k
-            for c, (_, bits, k) in want.blooms.items()
-        ):
-            bstats, bblooms = want.over(batch)
+        bstats, bblooms = want.over(batch) if want else ({}, {})
         stats: dict = {}
         for c, rng in sbase.items():
             if c not in types:
@@ -950,7 +968,7 @@ class TxTable:
     def _newest_blooms(m: dict) -> dict:
         """{col: bloom entry of the newest dir of ``m`` blooming it},
         newest dir's columns first — the geometry a clustered rewrite
-        inherits and a merge's batch pin observes."""
+        inherits."""
         out: dict = {}
         for d in reversed(m.get("dirs", [])):
             for col, entry in ((m.get("blooms") or {}).get(d) or {}).items():
@@ -1252,7 +1270,6 @@ class TxTable:
         where_range: dict | None = None,
         batch: DataFrame | None = None,
         partition_by: Sequence[str] | None = None,
-        pinned: tuple[dict, dict] = ({}, {}),
     ) -> int:
         """THE optimistic copy-on-write commit loop behind ``merge``,
         ``delete_where``, ``delete_keys`` and ``optimize``: resolve the
@@ -1265,8 +1282,7 @@ class TxTable:
         The replacement dir's stats and blooms bound its rows
         conservatively: its rows are a subset of the touched dirs' rows
         (union of their ranges, OR of their blooms), plus ``batch``'s
-        rows for a merge (``_merge_meta``, whose batch side starts from
-        ``pinned``, the metadata the merge observed on its batch pin). A lost
+        rows for a merge (``_merge_meta``). A lost
         race removes the spooled dir and retries against the new
         parent, so a concurrent commit's rows are rewritten, not lost."""
         for _ in range(max_retries):
@@ -1286,7 +1302,7 @@ class TxTable:
                 stats = self._union_stats(m.get("stats") or {}, touched)
                 blooms = self._union_blooms(m.get("blooms") or {}, touched)
             else:
-                stats, blooms = self._merge_meta(m, touched, batch, pinned)
+                stats, blooms = self._merge_meta(m, touched, batch)
             if stats:
                 maps["stats"][d] = stats
             if blooms:
@@ -1319,7 +1335,7 @@ class TxTable:
         ``prune_col`` (must be one of ``keys``) is MERGE FILE PRUNING —
         the Delta-style optimization that makes upserts affordable on a
         100 TB table: the batch's [min, max] on that key is COMPUTED
-        (observed on the batch pin — never a trusted declaration), and dirs
+        (from the pinned batch — never a trusted declaration), and dirs
         whose recorded ``stats_cols`` range cannot contain any batch
         key carry forward UNTOUCHED. Only intersecting dirs join the
         upsert; the batch's own rows land in the rewritten dir either
@@ -1344,7 +1360,6 @@ class TxTable:
             )
         v0 = self.latest_version()
         m0 = self._manifest(v0) if v0 else {"dirs": []}
-        pinned: tuple[dict, dict] = ({}, {})
         if prune_col is not None or m0.get("blooms") or m0.get("stats"):
             # pin the batch before deriving metadata from it: the prune
             # decision, the recorded bounds, and the batch-side bloom
@@ -1354,27 +1369,13 @@ class TxTable:
             # pre-computed range — leaving an unrewritten dir that
             # actually held batch keys (ADVICE r7). The batch is the
             # small side of a merge, so materializing it is cheap at
-            # any table size. The metadata the parent records (plus the
-            # prune range) is observed on the pin itself — no extra job.
-            types = {f.name: f.dataType.simpleString() for f in batch.schema.fields}
-            all_stats = m0.get("stats") or {}
-            recorded = {c for d in m0["dirs"] for c in all_stats.get(d) or {}}
-            meta = _DirMeta(
-                batch.schema,
-                [c for c in types if c in recorded or c == prune_col],
-                {
-                    c: (int(e["bits"]), int(e["k"]))
-                    for c, e in self._newest_blooms(m0).items()
-                    if types.get(c) == e["type"]
-                },
-            )
-            if meta:
-                batch, seen = observed(
-                    batch, f"txmerge-{uuid.uuid4().hex[:12]}", *meta.aggs()
-                )
+            # any table size.
             batch = batch.localCheckpoint(eager=True)
-            if meta:
-                pinned = meta.decode(seen.get)
+        batch_rng = (
+            _DirMeta(batch.schema, [prune_col]).over(batch)[0][prune_col]
+            if prune_col is not None
+            else None
+        )
         return self._copy_on_write(
             "merge",
             max_retries,
@@ -1384,12 +1385,9 @@ class TxTable:
             ),
             # an all-NULL batch range (None, None) is open-ended: every
             # dir is rewritten
-            where_range=(
-                None if prune_col is None else {prune_col: tuple(pinned[0][prune_col])}
-            ),
+            where_range=None if prune_col is None else {prune_col: tuple(batch_rng)},
             batch=batch,
             partition_by=partition_by,
-            pinned=pinned,
         )
 
     def delete_where(
@@ -1999,7 +1997,7 @@ def txgroup_commit_appends(group_path: str, appends: list[dict]) -> list[int]:
     unlinks when all of them exist. Returns the committed versions."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
+    from ..session import with_caller_job_group
 
     gp = Path(group_path)
     gp.mkdir(parents=True, exist_ok=True)
@@ -2019,7 +2017,7 @@ def txgroup_commit_appends(group_path: str, appends: list[dict]) -> list[int]:
         )
 
     if len(appends) > 1:
-        stage = inheritable_thread_target(appends[0]["table"].spark)(_stage)
+        stage = with_caller_job_group(appends[0]["table"].spark, _stage)
         with ThreadPoolExecutor(max_workers=min(4, len(appends))) as pool:
             staged = list(pool.map(stage, appends))
     else:

@@ -504,7 +504,7 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inherit the caller's job group, so their jobs are attributed to it.
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
+    from ..session import with_caller_job_group
 
     halves = corpus.withColumn("h", F.pmod(F.xxhash64("doc_id"), F.lit(2)))
     sig_halves = [
@@ -515,7 +515,7 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(2)
     ]
     with ThreadPoolExecutor(max_workers=2) as pool:
-        list(pool.map(inheritable_thread_target(spark)(idx.append), sig_halves))
+        list(pool.map(with_caller_job_group(spark, idx.append), sig_halves))
     batch_sigs = D.minhash_signatures(
         batch, "doc_id", "text", n=3, portable=True
     )

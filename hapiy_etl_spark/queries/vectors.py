@@ -1534,7 +1534,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unchanged; the threads inherit the caller's job group.
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
+    from ..session import with_caller_job_group
 
     def _exact():
         return (
@@ -1554,11 +1554,10 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             index=(cent, assigned), codebooks=resid_books,
         ).localCheckpoint(eager=True)
 
-    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_exact = pool.submit(inherit(_exact))
-        f_pq = pool.submit(inherit(_pq_pool))
-        f_ivfpq = pool.submit(inherit(_ivfpq_pool))
+        f_exact = pool.submit(with_caller_job_group(spark, _exact))
+        f_pq = pool.submit(with_caller_job_group(spark, _pq_pool))
+        f_ivfpq = pool.submit(with_caller_job_group(spark, _ivfpq_pool))
         exact, pq_pool, ivfpq_pool = (
             f_exact.result(), f_pq.result(), f_ivfpq.result()
         )

@@ -53,6 +53,22 @@ def tune_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def with_caller_job_group(spark: SparkSession, fn):
+    """``fn`` wrapped to run with the calling thread's Spark local
+    properties (its job group), for handing to a thread pool, so the
+    pool's jobs are attributed to the caller. In pinned-thread mode
+    (py4j ``ClientServer``, the default) each Python thread has its own
+    JVM thread and needs the copy; with ``PYSPARK_PIN_THREAD=false``
+    ``inheritable_thread_target(spark)`` would return ``spark`` itself,
+    so ``fn`` is returned unchanged there."""
+    from py4j.clientserver import ClientServer
+    from pyspark import SparkContext, inheritable_thread_target
+
+    if isinstance(SparkContext._gateway, ClientServer):
+        return inheritable_thread_target(spark)(fn)
+    return fn
+
+
 def get_spark(app_name: str = "hapiy_etl_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or get) a local SparkSession tuned for this engine.
 

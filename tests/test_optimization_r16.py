@@ -136,7 +136,7 @@ def test_grouped_bloom_collect_is_one_row_per_group(spark, tmp_path):
         [(i % 4, i * 37) for i in range(400)], "g int, doc_id long"
     )
     meta = _DirMeta(df.schema, blooms={"doc_id": (1 << 14, 5)})
-    rows = df.groupBy("g").agg(*meta.aggs()).collect()
+    rows = meta.project(df).groupBy("g").agg(*meta.aggs()).collect()
     assert sorted(r["g"] for r in rows) == [0, 1, 2, 3]
     for r in rows:
         per_dir = ref_bloom(df.where(F.col("g") == r["g"]), "doc_id", 1 << 14, 5)

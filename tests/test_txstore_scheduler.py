@@ -4555,6 +4555,30 @@ def test_txgroup_dedup_batch_commit_runs_only_its_writes(
     assert all(m["stats"][d]["bb"][0] is not None for d in m["dirs"])
 
 
+def test_txgroup_commit_appends_with_pinned_thread_mode_off(spark, tmp_path, monkeypatch):
+    # with PYSPARK_PIN_THREAD=false the py4j gateway is no ClientServer
+    # and pyspark's inheritable_thread_target(spark) returns the session
+    # itself; the stage pool must then run its plain callables
+    import py4j.clientserver
+
+    from hapiy_etl_spark.operators.txstore import txgroup_commit_appends
+    from hapiy_etl_spark.session import with_caller_job_group
+
+    monkeypatch.setattr(py4j.clientserver, "ClientServer", type("Other", (), {}))
+    assert with_caller_job_group(spark, len) is len
+    t1 = TxTable(spark, str(tmp_path / "t1"))
+    t2 = TxTable(spark, str(tmp_path / "t2"))
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    vs = txgroup_commit_appends(
+        str(tmp_path / "grp"),
+        [{"table": t1, "df": df, "stats_cols": ["k"]}, {"table": t2, "df": df}],
+    )
+    assert vs == [1, 1]
+    assert t1.read().count() == 2 and t2.read().count() == 2
+    (d,) = t1._manifest(1)["dirs"]
+    assert t1._manifest(1)["stats"][d] == {"k": [1, 2]}
+
+
 def test_optimize_clustered_bloom_cols_add_no_job(spark, spark_jobs, tmp_path):
     df = spark.createDataFrame(
         [(i, f"s{i}", i * 0.5) for i in range(2000)], "k long, s string, v double"
