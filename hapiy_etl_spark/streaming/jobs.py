@@ -624,7 +624,8 @@ def ingest_dedup_batch(
     ``extra_appends`` (r15, VERDICT r14 item 8): a callable
     ``survivors -> list[dict]`` producing FURTHER per-epoch appends —
     each ``{"table": TxTable (or "path": str), "df": DataFrame,
-    optional "stats_cols"/"bloom_cols"/"partition"/"extra_meta"}`` —
+    optional "stats_cols"/"bloom_cols"/"bloom_bits"/"bloom_k"/
+    "partition"/"extra_meta"}`` —
     that ride the SAME atomic group record as the corpus and index
     (e.g. the flagship topology's per-source MV partial: the survivors
     frame IS the epoch's corpus change set, so derived partials can
@@ -804,6 +805,8 @@ def ingest_dedup_batch(
                     "meta": {**base_meta, **(x.get("extra_meta") or {})},
                     "stats_cols": x.get("stats_cols"),
                     "bloom_cols": x.get("bloom_cols"),
+                    "bloom_bits": x.get("bloom_bits"),
+                    "bloom_k": x.get("bloom_k"),
                     "partition": x.get("partition"),
                 }
                 for xt, x, _ in extras
@@ -829,6 +832,8 @@ def ingest_dedup_batch(
                     meta={**base_meta, **(x.get("extra_meta") or {})},
                     stats_cols=x.get("stats_cols"),
                     bloom_cols=x.get("bloom_cols"),
+                    bloom_bits=x.get("bloom_bits"),
+                    bloom_k=x.get("bloom_k"),
                     partition=x.get("partition"),
                 )
     # replay gate: a fully-replayed epoch commits nothing and must

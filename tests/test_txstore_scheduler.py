@@ -4594,3 +4594,269 @@ def test_optimize_clustered_bloom_cols_add_no_job(spark, spark_jobs, tmp_path):
         assert len(m["dirs"]) == 4
         assert all(list(m.get("blooms", {}).get(d, {})) == bloom_cols for d in m["dirs"])
     assert jobs["bloomed"] == jobs["plain"], jobs
+
+
+# -- the lookup path: one SQL predicate --------------------------------------
+
+
+def _parent_row_filter(df, where=None, where_in=None, where_range=None):
+    """The row-level re-filter ``TxTable.read`` applied before it became
+    one SQL predicate: one ``where`` per condition, every value an
+    ``F.lit`` (names backtick-quoted so ``a`b`` parses)."""
+    q = lambda k: F.col("`" + k.replace("`", "``") + "`")  # noqa: E731
+    for k, val in (where or {}).items():
+        df = df.where(q(k) == F.lit(val))
+    for k, vals in (where_in or {}).items():
+        df = df.where(q(k).isin(list(vals)))
+    for k, (lo, hi) in (where_range or {}).items():
+        if lo is not None:
+            df = df.where(q(k) >= F.lit(lo))
+        if hi is not None:
+            df = df.where(q(k) <= F.lit(hi))
+    return df
+
+
+def test_sql_literal_spells_the_type_and_value_of_lit(spark):
+    import datetime as dt
+    from decimal import Decimal
+
+    from hapiy_etl_spark.operators.txstore import _sql_literal
+
+    vals = [
+        None, True, False, 0, -1, 2**31 - 1, -(2**31), 2**31, -(2**31) - 1,
+        2**63 - 1, -(2**63), 1.5, -0.0, float("nan"), float("inf"),
+        float("-inf"), 5e-324, "", "it's", "back\\slash", "\\'", "50%", "a_b",
+        "ünï ©ødé 日本", "line\nbreak", "\\\\u0041", dt.date(2024, 2, 29),
+        dt.date(1000, 1, 1), Decimal("1.50"), Decimal("-0.001"), Decimal("0"),
+        Decimal("12345678901234567890.123"),
+    ]
+    cols = []
+    for i, v in enumerate(vals):
+        text = _sql_literal(v)
+        assert text is not None, v
+        cols += [F.lit(v).alias(f"a{i}"), F.expr(text).alias(f"b{i}")]
+    df = spark.range(1).select(*cols)
+    types = {f.name: f.dataType for f in df.schema.fields}
+    row = df.collect()[0]
+    for i, v in enumerate(vals):
+        assert types[f"a{i}"] == types[f"b{i}"], (v, _sql_literal(v))
+        assert repr(row[f"a{i}"]) == repr(row[f"b{i}"]), (v, _sql_literal(v))
+    # no exact spelling: F.lit's meaning depends on the process timezone
+    # (naive datetime), on the value's zone, or shifts the value (the
+    # 1582 calendar gap); an int outside int64 has no Spark type
+    for v in (
+        dt.datetime(2024, 1, 1, 12), dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc),
+        dt.date(1582, 10, 10), Decimal("1E+2"), Decimal("NaN"), 2**64, b"x",
+    ):
+        assert _sql_literal(v) is None, v
+
+
+def _literal_matrix_tables(spark, tmp_path):
+    import datetime as dt
+    from decimal import Decimal
+
+    schema = (
+        "id int, s string, i int, b bigint, f boolean, d double, day date, "
+        "dec decimal(20,3), ts timestamp, `my col` string, `a``b` int, repo string"
+    )
+    rows = [
+        (0, "it's", 2**31 - 1, 2**31, True, float("nan"), dt.date(2024, 2, 29),
+         Decimal("12.345"), dt.datetime(2024, 1, 1, 12), "x y", 1, "r1"),
+        (1, "back\\slash", -(2**31), -(2**31) - 1, False, float("inf"),
+         dt.date(2024, 3, 1), Decimal("-0.001"), dt.datetime(2024, 1, 2), "", 2, "r'2"),
+        (2, "50%", 0, 2**31 - 1, True, float("-inf"), dt.date(1999, 12, 31),
+         Decimal("0.000"), dt.datetime(2023, 12, 31, 23, 59, 59, 999999), "ünï", 3, "r1"),
+        (3, "a_b", 7, -(2**63), None, 1.5, None, None, None, None, None, "r1"),
+        (4, "", None, 2**63 - 1, False, -0.0, dt.date(2024, 2, 29),
+         Decimal("12345678901234567.123"), dt.datetime(2024, 1, 1, 12), "x y", 1, "r'2"),
+        (5, "ünï ©ødé 日本", 5, None, True, None, dt.date(2000, 1, 1),
+         Decimal("1.500"), dt.datetime(2024, 1, 3), "%", 9, "r3"),
+        (6, "x'\\'y", -1, 5, False, 0.0, dt.date(2024, 1, 1), Decimal("2.000"),
+         dt.datetime(2024, 1, 1), "_", 4, "r3"),
+        (7, None, 1, 1, True, 2.5, dt.date(2024, 1, 1), Decimal("3.000"),
+         dt.datetime(2024, 1, 1, 6), None, 5, "r1"),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    flat = TxTable(spark, str(tmp_path / "flat"))
+    flat.append(df, stats_cols=["i", "b", "s", "day", "ts", "dec"], bloom_cols=["s", "b"])
+    flat.append(df.where("id < 3"))  # a second dir, without metadata
+    parted = TxTable(spark, str(tmp_path / "parted"))
+    parted.merge(df, keys=["id"], partition_by=["repo"])
+    return flat, parted
+
+
+def test_txstore_read_literal_parity_matrix(spark, tmp_path):
+    import datetime as dt
+    from decimal import Decimal
+
+    flat, parted = _literal_matrix_tables(spark, tmp_path)
+    cases = [
+        {"where": {"s": "it's"}},
+        {"where": {"s": "back\\slash"}},
+        {"where": {"s": "50%"}},
+        {"where": {"s": "a_b"}},
+        {"where": {"s": ""}},
+        {"where": {"s": "ünï ©ødé 日本"}},
+        {"where": {"s": "x'\\'y"}},
+        {"where_in": {"s": ["it's", "back\\slash", "50%", "a_b", "", "x'\\'y", "nope"]}},
+        {"where": {"i": 2**31 - 1}},
+        {"where": {"i": -(2**31)}},
+        {"where": {"i": 2**31}},
+        {"where": {"b": 2**31}},
+        {"where": {"b": -(2**31) - 1}},
+        {"where": {"b": 2**31 - 1}},
+        {"where_in": {"b": [2**31, -(2**31) - 1, 2**63 - 1, -(2**63), 5]}},
+        {"where_in": {"i": [2**31 - 1, -(2**31), 2**31]}},
+        {"where_range": {"b": (-(2**31) - 1, 2**31)}},
+        {"where_range": {"i": (-(2**31), None)}},
+        {"where": {"f": True}},
+        {"where": {"f": False}},
+        {"where": {"d": float("nan")}},
+        {"where": {"d": float("inf")}},
+        {"where": {"d": float("-inf")}},
+        {"where_in": {"d": [float("nan"), 1.5, -0.0]}},
+        {"where_range": {"d": (float("-inf"), 2.0)}},
+        {"where": {"day": dt.date(2024, 2, 29)}},
+        {"where_range": {"day": (dt.date(2000, 1, 1), dt.date(2024, 2, 29))}},
+        {"where": {"dec": Decimal("12.345")}},
+        {"where_in": {"dec": [Decimal("-0.001"), Decimal("1.5"), Decimal("0")]}},
+        {"where_range": {"dec": (Decimal("0"), Decimal("12.345"))}},
+        {"where": {"ts": dt.datetime(2024, 1, 1, 12)}},
+        {"where_in": {"ts": [dt.datetime(2024, 1, 2), dt.datetime(2024, 1, 3)]}},
+        {"where_range": {"ts": (dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2))}},
+        {"where": {"repo": "r'2"}},
+        {"where_in": {"repo": ["r1", "r'2"]}},
+        {"where": {"my col": "x y"}},
+        {"where_in": {"my col": ["ünï", "%", "_"]}},
+        {"where": {"a`b": 1}},
+        {"where_range": {"a`b": (2, 4)}},
+        {"where": {"s": None}},
+        {
+            "where": {"repo": "r1", "f": True},
+            "where_in": {"i": [0, 7, 2**31 - 1], "ts": [dt.datetime(2024, 1, 1, 12), dt.datetime(2024, 1, 1)]},
+            "where_range": {"b": (None, 2**31), "day": (dt.date(2024, 1, 1), None)},
+        },
+    ]
+    for t in (flat, parted):
+        matched = 0
+        for case in cases:
+            # repr: NaN == NaN, and rows sort by their unique id first
+            got = sorted(map(repr, _rows(t.read(**case))))
+            want = sorted(map(repr, _rows(_parent_row_filter(t.read(), **case))))
+            assert got == want, (t.path.name, case)
+            matched += bool(got)
+        assert matched >= len(cases) - 4, matched  # the matrix is not vacuous
+
+
+def test_txstore_warm_where_in_lookup_py4j_budget(spark, py4j_round_trips, tmp_path):
+    # the ingest_mix lookup: 50 keys over a Hive-partitioned merge dir;
+    # one SQL predicate (the per-condition Column form made 260)
+    t = TxTable(spark, str(tmp_path / "t"))
+    df = spark.createDataFrame(
+        [(f"{i:040x}", f"msg {i}", "org/repo") for i in range(500)],
+        "commit_hash string, commit_message string, repo string",
+    )
+    t.merge(df, keys=["repo", "commit_hash"], partition_by=["repo"])
+    keys = [f"{i:040x}" for i in range(0, 500, 10)]
+    t.read(where_in={"commit_hash": keys[:3]})  # warm
+    out, n = py4j_round_trips(lambda: t.read(where_in={"commit_hash": keys}))
+    assert n <= 30, n
+    assert sorted(r.commit_hash for r in out.collect()) == keys
+
+
+def test_txstore_read_after_each_write_sees_the_new_snapshot(spark, tmp_path):
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.append(spark.createDataFrame([(i, f"v{i}") for i in range(4)], "k long, v string"))
+    fresh = lambda: _rows(TxTable(spark, str(t.path)).read())  # noqa: E731
+    assert _rows(t.read()) == fresh()
+    steps = [
+        lambda: t.append(spark.createDataFrame([(9, "n")], "k long, v string")),
+        lambda: t.merge(spark.createDataFrame([(1, "M"), (7, "m")], "k long, v string"), keys=["k"]),
+        lambda: t.delete_keys([0, 9], on="k"),
+        lambda: t.optimize(),
+        lambda: t.restore(1),
+    ]
+    seen = []
+    for step in steps:
+        _rows(t.read(where_in={"k": [1, 2]}))  # this instance read the parent
+        step()
+        got = _rows(t.read())
+        assert got == fresh()
+        seen.append(got)
+    assert seen[0][-1] == (9, "n") and (1, "M") in seen[1]
+    assert (0, "v0") not in seen[2] and seen[-1] == _rows(t.read(version=1))
+
+
+def test_txstore_read_of_vacuumed_version_raises_after_reading_it(spark, tmp_path):
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.overwrite(spark.createDataFrame([(1, "a")], "k long, v string"))
+    assert _rows(t.read(version=1)) == [(1, "a")]
+    t.overwrite(spark.createDataFrame([(2, "b")], "k long, v string"))
+    t.vacuum(keep_last=1, min_age_s=0)
+    with pytest.raises(FileNotFoundError, match="vacuumed"):
+        t.read(version=1)
+    assert _rows(t.read()) == [(2, "b")]
+
+
+def test_txstore_two_reads_of_one_snapshot_join(spark, tmp_path):
+    from hapiy_etl_spark.operators.upsert import table_diff
+
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.append(spark.createDataFrame([(i, f"v{i}") for i in range(10)], "k long, v string"))
+    lo = t.read(where_range={"k": (0, 5)})
+    hi = t.read(where_range={"k": (3, 9)})
+    # Column handles of two reads resolve to their own side
+    j = lo.join(hi, lo.k == hi.k).select(lo.k, hi.v)
+    assert _rows(j) == [(k, f"v{k}") for k in range(3, 6)]
+    assert _rows(lo.join(hi, lo.k == hi.k, "left_anti")) == [(k, f"v{k}") for k in range(3)]
+    d = table_diff(t.read(where_in={"k": [1, 2]}), t.read(), ["k"])
+    assert _rows(d) == sorted(("I", k, f"v{k}") for k in range(10) if k not in (1, 2))
+    # the keyed CDF fallback joins two reads of snapshots sharing dirs
+    t.optimize()
+    t.append(spark.createDataFrame([(10, "v10")], "k long, v string"))
+    assert _rows(t.changes(1, keys=["k"])) == [(10, "v10")]
+
+
+def test_txstore_caller_cache_does_not_change_later_reads(spark, tmp_path):
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.append(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"))
+    c = t.read().cache()
+    assert c.count() == 2
+    assert _rows(t.read(where={"k": 2})) == [(2, "b")]
+    t.append(spark.createDataFrame([(3, "c")], "k long, v string"))
+    assert _rows(t.read()) == [(1, "a"), (2, "b"), (3, "c")]
+    c.unpersist()
+    assert _rows(t.read(version=1)) == [(1, "a"), (2, "b")]
+    assert not t.read(version=1).is_cached
+    assert _rows(t.read(where_in={"k": [1, 3]})) == [(1, "a"), (3, "c")]
+
+
+def test_txgroup_extra_append_keeps_bloom_geometry(spark, tmp_path):
+    from hapiy_etl_spark.operators.txstore import txgroup_commit_appends
+    from hapiy_etl_spark.streaming.jobs import ingest_dedup_batch
+
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(20)], "k long, v string")
+    geom = {"bloom_cols": ["k"], "bloom_bits": 65536, "bloom_k": 3}
+
+    def recorded(t):
+        m = t._manifest(t.latest_version())
+        bl = m["blooms"][m["dirs"][-1]]["k"]
+        return bl["bits"], bl["k"]
+
+    x = TxTable(spark, str(tmp_path / "x"))
+    y = TxTable(spark, str(tmp_path / "y"))
+    txgroup_commit_appends(
+        str(tmp_path / "grp"), [{"table": x, "df": df, **geom}, {"table": y, "df": df}]
+    )
+    assert recorded(x) == (65536, 3)
+    # the dedup batch's extra appends ride the same group commit
+    mv = TxTable(spark, str(tmp_path / "mv"))
+    batch = spark.createDataFrame(
+        [(i, " ".join(f"d{i}w{j}" for j in range(20))) for i in range(10)],
+        "doc_id long, text string",
+    )
+    ingest_dedup_batch(
+        batch, str(tmp_path / "corpus"), str(tmp_path / "sigs"), epoch_id=1, run_id="r",
+        extra_appends=lambda s: [{"table": mv, "df": s.selectExpr("doc_id AS k"), **geom}],
+    )
+    assert recorded(mv) == (65536, 3)
